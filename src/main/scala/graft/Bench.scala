@@ -52,119 +52,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Per-family edge-build attribution (judge discipline: name the
-    // cost of each added family instead of guessing): times ONE count
-    // of each relational edge-family builder at this SF and prints a
-    // JSON line, then exits. Run alone — not part of the normal bench.
-    if (sys.env.get("SPARK_GRAFT_FAMILY_TIMES").contains("1")) {
-      import graft.fixtures.Corpus
-      val canon = Corpus.canonicalIds(spark, sfDir).localCheckpoint(true)
-      // Mirror the pipeline: the ~14 lineitem-derived families share ONE
-      // materialized lineFacts pass there, so time that pass as its own
-      // row and each family as its MARGINAL group-by over the cached
-      // frame — a per-family number that includes a private lineFacts
-      // rebuild would misattribute the shared join to every family.
-      val lf = Corpus.lineFacts(spark, sfDir, Some(canon))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val lfT0 = System.nanoTime()
-      val lfRows = lf.count()
-      val lfSec = (System.nanoTime() - lfT0) / 1e9
-      // followed_by is likewise shared with regulates in the pipeline:
-      // its own row below pays the materialization (persist is lazy),
-      // regulates is timed as the marginal lift computation over it.
-      val fb = Corpus.followedByEdges(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eventFacts/docLangFacts are likewise shared in the pipeline
-      // (events: performed + prefers + 2 node families; documents:
-      // dominant_lang + 2 node families) — timed as their own rows,
-      // the families as marginal rollups.
-      val ef = Corpus.eventFacts(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val efT0 = System.nanoTime()
-      val efRows = ef.count()
-      val efSec = (System.nanoTime() - efT0) / 1e9
-      // docFacts is the pipeline's shared documents pass (r6): the
-      // document families below are marginal projections over it.
-      val dof = Corpus.docFacts(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val dofT0 = System.nanoTime()
-      val dofRows = dof.count()
-      val dofSec = (System.nanoTime() - dofT0) / 1e9
-      val dlf = Corpus.docLangFactsFrom(dof)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val dlfT0 = System.nanoTime()
-      val dlfRows = dlf.count()
-      val dlfSec = (System.nanoTime() - dlfT0) / 1e9
-      val fams: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "placed" -> (() => Corpus.placedEdges(spark, sfDir)),
-        "contains" -> (() => Corpus.containsFrom(lf)),
-        "of_type" -> (() => Corpus.ofTypeEdges(spark, sfDir)),
-        "performed" -> (() => Corpus.performedFrom(ef)),
-        "written_in" -> (() => Corpus.writtenInFrom(dof)),
-        "from_source" -> (() => Corpus.fromSourceFrom(dof)),
-        "fulfills" -> (() => Corpus.fulfillsFrom(lf)),
-        "supplies" -> (() => Corpus.supplyFrom(lf)),
-        "in_region" -> (() => Corpus.inRegionEdges(spark, sfDir)),
-        "branded_as" -> (() => Corpus.brandedAsEdges(spark, sfDir)),
-        "in_segment" -> (() => Corpus.inSegmentEdges(spark, sfDir)),
-        "from_nation" -> (() => Corpus.fromNationEdges(spark, sfDir)),
-        "rated" -> (() => Corpus.ratedFrom(lf)),
-        "near_dup_of" -> (() =>
-          graft.textops.DedupOps.minhashNearDupPairsFromSigs(dof)),
-        "shares_part" -> (() => Corpus.sharesPartFrom(lf)),
-        "co_purchased_with" -> (() => Corpus.coPurchasedFrom(lf)),
-        "cites" -> (() => Corpus.citesFrom(dof)),
-        "touched" -> (() => Corpus.touchedEdges(spark, sfDir)),
-        "peer_of" -> (() => Corpus.peerOfEdges(spark, sfDir)),
-        "next_order" -> (() => Corpus.nextOrderEdges(spark, sfDir)),
-        "returned" -> (() => Corpus.returnedFrom(lf)),
-        "ships_to" -> (() => Corpus.shipsToFrom(lf)),
-        // breadth block 4
-        "similar_to" -> (() => Corpus.similarToFrom(dof)),
-        "followed_by" -> (() => fb),
-        "located_in_region" -> (() => Corpus.locatedInRegionEdges(spark, sfDir)),
-        "best_supplied_by" -> (() => Corpus.bestSupplierFrom(lf)),
-        "closest_to" -> (() => Corpus.closestPartEdges(spark, sfDir)),
-        // breadth block 5
-        "in_family" -> (() => Corpus.inFamilyEdges(spark, sfDir)),
-        "variant_of" -> (() => Corpus.variantOfEdges(spark, sfDir)),
-        "bundle_with" -> (() => Corpus.bundleWithFrom(lf)),
-        "regulates" -> (() => Corpus.regulatesFrom(fb)),
-        "prefers" -> (() => Corpus.prefersFrom(ef)),
-        "bought_from" -> (() => Corpus.boughtFromFrom(lf)),
-        "representative_order" ->
-          (() => Corpus.representativeOrderEdges(spark, sfDir)),
-        "charged_with" -> (() => Corpus.chargedWithFrom(lf)),
-        "dominant_lang" -> (() => Corpus.dominantLangFrom(dlf)),
-        "handles" -> (() => Corpus.handlesFrom(lf)))
-      val timed = Seq(
-        "lineFacts_shared" -> (lfSec, lfRows),
-        "eventFacts_shared" -> (efSec, efRows),
-        "docFacts_shared" -> (dofSec, dofRows),
-        "docLangFacts_shared" -> (dlfSec, dlfRows)) ++ fams.map {
-        case (name, f) =>
-          val t0 = System.nanoTime()
-          val n = f().count()
-          val s = (System.nanoTime() - t0) / 1e9
-          name -> (s, n)
-      }
-      // v2 semantics marker (ADVICE r5): since the shared-pass fusion,
-      // each family's value is the MARGINAL group-by over a persisted
-      // shared frame, not a standalone rebuild — a reader comparing the
-      // r4 artifact must not read the attribution change as a speedup.
-      println("{\"metric\":\"family_times_v2\"," +
-        "\"semantics\":\"marginal_over_shared_frames\"," +
-        "\"sf\":\"" + sfDir + "\",\"families\":{" +
-        timed.map { case (k, (s, n)) =>
-          "\"" + k + "\":{\"sec\":" + f"$s%.2f" + ",\"rows\":" + n + "}"
-        }.mkString(",") + "}}")
-      // release the shared frames before exit (ADVICE r5: cached blocks
-      // must not outlive the block that owns them)
-      Seq(lf, fb, ef, dof, dlf).foreach(_.unpersist(false))
-      spark.stop()
-      return
-    }
-
     val pipelineOnly = sys.env.get("SPARK_GRAFT_PIPELINE_ONLY").contains("1")
 
     // Self-attribution instruments (the bench JSON must let a reader

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.extract.HtmlText
 import graft.fixtures.Corpus
 import graft.link.Linker
+import graft.schema.{Families, KgSchema}
 import graft.store.GraphStore
 import graft.triples.Triples
 
@@ -49,6 +50,9 @@ object Pipeline {
         concat(col("url"), lit("#"), col("rep")).as("url"),
         col("warc_ts"), col("html"), col("text"), col("lang"))
 
+  /** Scan-size cap for persisting a hot dimension table (see `run`). */
+  private val DimPersistMaxBytes = 1024L << 20
+
   /** Stage names the pipeline commits — the retention sweep below and
     * external tooling share this list. */
   val Stages: Seq[String] = Seq("canonical_ids", "extracted", "mentions",
@@ -73,7 +77,7 @@ object Pipeline {
     // Construction-time schema gate (reference pydantic/enum checks):
     // a misdeclared type/prop/lineage fails HERE with the full typed
     // error list, not as an AnalysisException deep inside a builder.
-    graft.schema.KgSchema.validateConfig()
+    KgSchema.validateConfig()
     // Catalyst constraint propagation is O(plan²)-ish on the ~40-family
     // union this pipeline plans, and buys nothing here (no filters to
     // infer — every family scans its source fully). Off for the scope
@@ -97,420 +101,321 @@ object Pipeline {
     // so the bench JSON carries them verbatim.
     val counters = new graft.metrics.TaskCounters
     spark.sparkContext.addSparkListener(counters)
-    var cLast = counters.snapshot
-    val marks = scala.collection.mutable.ArrayBuffer.empty[StageMark]
-    def mark(stage: String): Unit = {
-      // wall clock FIRST: the listener-bus drain (up to its 10 s
-      // timeout) is metrics-collection latency, not stage work — only
-      // the counter snapshot below needs the drained bus (ADVICE r5)
-      val now = System.nanoTime()
-      val cpuNow = osBean.getProcessCpuTime
-      graft.metrics.TaskCounters.drain(spark.sparkContext)
-      val c = counters.snapshot
-      val d = c.zip(cLast).map { case (a, b) => a - b }
-      println(f"[pipeline] $stage wall=${(now - tLast) / 1e9}%.1fs " +
-        f"cpu=${(cpuNow - cpuLast) / 1e9}%.1fs " +
-        f"taskRun=${d(0) / 1e3}%.1fs taskCpu=${d(1) / 1e9}%.1fs " +
-        f"shufW=${d(2) / 1e6}%.0fMB shufR=${d(3) / 1e6}%.0fMB " +
-        f"scan=${d(4) / 1e6}%.0fMB rows=${d(5)}")
-      marks += StageMark(stage, (now - tLast) / 1e9, d(0) / 1e3, d(1) / 1e9,
-        d(2) / 1e6, d(4) / 1e6, d(5))
-      tLast = now
-      cpuLast = cpuNow
-      cLast = c
-    }
-
-    // Per-stage input fingerprints: a changed corpus or parameterization
-    // invalidates downstream committed snapshots on resume (the manifest
-    // records the fp; GraphStore recomputes on mismatch).
-    val fpCorpus = s"corpus;sfDir=$sfDir;mult=$mult"
-    val fpExtract = s"extract-v2;$fpCorpus"
-    val fpMentions = s"mentions-trie-v2;$fpExtract;dict=aliasDict"
-    val fpCanon = s"canon-cc-v1;sfDir=$sfDir"
-    val fpTriples = s"triples-v1;$fpMentions;$fpCanon"
-    // v6 (round 4 final): the store persists the FULL declared schema —
-    // all 14 node types (complete relational entity universes plus the
-    // name-family vocabulary, not only text-mentioned ones) and all 40
-    // edge families (reference edge-vocabulary parity).
-    val fpNodes = s"nodes-typed-v6;$fpCanon;attrs=nodeAttrs;full-univ;" +
-      "+order+doc+ptype+fam+user+evt+lang+src+supp+region+brand+seg"
-    val fpEdges = s"edges-fused-v8;$fpMentions;$fpCanon;all-40-families-v1"
-
-    // Stage-commit pipelining: independent stages run as concurrent
-    // Spark jobs (the scheduler interleaves their tasks), and each
-    // commit's lineage read-back + manifest land asynchronously off the
-    // critical path (GraphStore.awaitPending at the end; a kill leaves
-    // manifest-less corpses that resume recomputes — same guarantee).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-
-    // Stage 3/4 input: the CC-derived canonicalization table depends
-    // only on the source tables — overlap it with extract+mentions.
-    val canonF = Future {
-      GraphStore.getOrCompute(spark, storeBase, "canonical_ids",
-        inputFp = fpCanon, lineageAsync = true) {
-        Corpus.canonicalIds(spark, sfDir)
-      }
-    }
-
-    // Hot DIMENSION tables: the 20+ family builders each scan the base
-    // tables independently (Spark has no cross-subtree scan dedup);
-    // persisting turns ~20 re-scans into one scan + cache hits via
-    // CacheManager plan matching. persist() is lazy, so a resumed run
-    // (committed snapshots fresh) never materializes them. The persist
-    // is SIZE-GATED (r4 Wrong #2): a table is cached only when its scan
-    // estimate fits the cap, so at a 100× relational scale-up the
-    // fact-shaped tables fall out of the cache automatically and stream
-    // instead. `lineitem` is not listed at all — after the lineFacts
-    // fusion it has exactly ONE consumer; `documents` likewise (the
-    // docFacts fusion leaves only the touched-edges endpoint list).
-    val dimPersistCap =
-      sys.env.getOrElse("SPARK_GRAFT_DIM_PERSIST_MAX_MB", "1024").toLong << 20
-    val hotTables = Seq("orders", "customer", "part", "events")
-      .map(n => Corpus.table(spark, sfDir, n))
-      .filter(_.queryExecution.optimizedPlan.stats.sizeInBytes <= dimPersistCap)
-      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // Shared fact-grain aggregates (the lineFacts discipline applied to
-    // the other two fact-shaped inputs): eventFacts is the (user,
-    // event_type) grain of the event stream — four families (user /
-    // event-type nodes, performed / prefers edges) are marginal rollups
-    // over it; docFacts is ONE document-corpus scan computing metadata
-    // + fingerprint + SimHash + shingle/MinHash signatures for its
-    // seven consumers; docLangFacts rolls docFacts up to (source, lang).
-    // All persisted lazily — a resumed run never materializes them.
-    val eventFacts = Corpus.eventFacts(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val docFacts = Corpus.docFacts(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val docLangFacts = Corpus.docLangFactsFrom(docFacts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The NODES stage depends on none of extract/mentions/canon —
-    // launched here as a concurrent commit whose jobs back-fill the
-    // extract and mentions stages' idle task slots (those two stages
-    // keep well under half the slots busy). Awaited before the edges
-    // stage, which semi-joins against the committed node ids.
-    val nodesF = Future {
-      GraphStore.getOrCompute(spark, storeBase, "nodes",
-          partitionByCols = Seq("bucket"), inputFp = fpNodes, lineageAsync = true) {
-        // Multi-adapter node merge (reference: one adapter per source —
-        // uniprot/drug/go/... — all landing in one typed node table):
-        // the COMPLETE relational entity universes + order ledger +
-        // document metadata + event stream + vocabularies + supplier/
-        // region/brand/segment, every family schema-declared in
-        // KgSchema and conformance-checked by the same violations
-        // machinery. Complete universes also guarantee every declared
-        // edge family survives skip-bad-relationships intact (store
-        // census == graph census).
-        val plain = Seq(
-          Corpus.orderNodes(spark, sfDir),
-          Corpus.documentNodesFrom(docFacts),
-          Corpus.ptypeNodes(spark, sfDir),
-          Corpus.userNodesFrom(eventFacts),
-          Corpus.eventTypeNodesFrom(eventFacts),
-          Corpus.languageNodesFrom(docLangFacts),
-          Corpus.sourceNodesFrom(docLangFacts),
-          Corpus.supplierNodes(spark, sfDir),
-          Corpus.regionNodes(spark, sfDir),
-          Corpus.brandNodes(spark, sfDir),
-          Corpus.segmentNodes(spark, sfDir))
-          .map(_.withColumn("props_arr", map().cast("map<string,array<string>>"))
-            .withColumn("embedding", lit(null).cast("array<float>")))
-          .reduce(_ unionByName _)
-        // One exchange on the bucket key before the partitioned write:
-        // without it every upstream partition of the 12-family union
-        // writes its own file per bucket directory (~270 files of
-        // ~16 KB at sf0.1), and the write + lineage read-back pay the
-        // per-file open/close three times. After: one task per occupied
-        // bucket, 32 right-sized files.
-        Triples.nodesTyped(Corpus.relationalEntityNodes(spark, sfDir),
-            Corpus.nodeAttrs(spark, sfDir))
-          .unionByName(plain)
-          .withColumn("bucket", pmod(xxhash64(col("id")), lit(32)))
-          .repartition(32, col("bucket"))
-      }
-    }
-
-    // The five edge builders with EAGER actions inside (bounded-posting
-    // caps + near-dup candidate materialization) start as soon as their
-    // OWN inputs exist — not after the extract commit. near_dup and
-    // regulates depend only on the doc/order fixtures and fire
-    // immediately; the three lineFacts families chain on canonF (the
-    // canonicalization commit, which finishes a few seconds in) via
-    // future composition instead of an inline Await that would serialize
-    // them behind the extract write. Their jobs back-fill the extract/
-    // mentions stages' idle task slots (those stages keep well under
-    // half the slots busy — guide §2.6 job overlap); previously they
-    // could only start after extract + audit, which left the edges-plan
-    // await blocking ~10 s on work that had barely started. Resume
-    // discipline preserved: when the edges snapshot is already fresh, no
-    // future is started and nothing here materializes. Job labels are
-    // thread-local, so each family's jobs stay attributable.
-    val edgesFresh =
-      GraphStore.committedFingerprint(storeBase, "edges").contains(fpEdges)
-    def describe[T](desc: String)(f: => T): T = {
-      spark.sparkContext.setJobDescription(desc)
-      try f finally spark.sparkContext.setJobDescription(null)
-    }
-    def eager[T](desc: String)(f: => T): Future[T] =
-      if (edgesFresh) null else Future(describe(desc)(f))
-    // followed_by is both its own family and the regulates input —
-    // PERSISTED so it truly computes once (ADVICE r4). Lazy — a resumed
-    // run never materializes it; unpersisted after the edges commit.
-    val followedBy = Corpus.followedByEdges(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nearDupF = eager("edges: near_dup_of")(
-      graft.textops.DedupOps.minhashNearDupPairsFromSigs(docFacts)
-        .select(
-          concat(lit("DOC:"), col("id1")).as("subject_id"),
-          lit("near_dup_of").as("relation_label"),
-          concat(lit("DOC:"), col("id2")).as("object_id"),
-          col("common"), col("size1"), col("size2")))
-    val regulatesF = eager("edges: regulates")(
-      Corpus.regulatesFrom(followedBy))
-    // The SHARED line-fact projection (r4 Next #2): ~14 edge families
-    // all reduce the same enriched lineitem (⨝ orders ⨝ customer ⨝
-    // part ⨝ canon, dims broadcast). Built as a continuation of the
-    // canonicalization future and persisted lazily — a resumed run
-    // never materializes it.
-    val lineFactsF: Future[DataFrame] = canonF.map { canon =>
-      Corpus.lineFacts(spark, sfDir, Some(canon))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    def eagerLf[T](desc: String)(f: DataFrame => T): Future[T] =
-      if (edgesFresh) null else lineFactsF.map(lf => describe(desc)(f(lf)))
-    val bundleWithF = eagerLf("edges: bundle_with")(Corpus.bundleWithFrom)
-    val sharesPartF = eagerLf("edges: shares_part")(Corpus.sharesPartFrom)
-    val coPurchasedF = eagerLf("edges: co_purchased")(Corpus.coPurchasedFrom)
-
-    // Uniform sink projection: the named typed-prop columns of each
-    // family fold into the properties map (string-encoded, the
-    // KgSchema value-typing contract); skip-bad-relationships applies
-    // to every family at the edges commit.
-    def propsOf(df: DataFrame, keys: String*): DataFrame = {
-      val m =
-        if (keys.isEmpty) map().cast("map<string,string>")
-        else map(keys.flatMap(k => Seq(lit(k), col(k).cast("string"))): _*)
-      df.select(col("subject_id"), col("relation_label"), col("object_id"),
-        m.as("properties"))
-    }
-    // The ~35 LAZY family frames are built in PARALLEL futures, each
-    // starting as soon as its input frame exists (fixture dims and the
-    // shared doc/event facts: immediately; lineFacts consumers: when
-    // canonF resolves). Building a frame runs the ANALYZER on its plan
-    // — single-threaded driver CPU that used to execute serially inside
-    // one future after the pagesets commit, directly on the edges-plan
-    // await path (measured as a multi-second driver-only gap). The
-    // pagesets-dependent entries (evidence fusion, co_ordered) chain on
-    // `pageSetsP`, completed right after the pagesets commit below.
-    // Union ORDER is preserved exactly (fused +: the list order here).
+    // Completed right after the pagesets commit; failed by any throw
+    // before it, so no future chained on it waits forever.
     val pageSetsP = scala.concurrent.Promise[(DataFrame, Int)]()
-    def fr(f: => DataFrame): Future[DataFrame] =
-      if (edgesFresh) null else Future(f)
-    def frLf(f: DataFrame => DataFrame): Future[DataFrame] =
-      if (edgesFresh) null else lineFactsF.map(lf => f(lf))
-    val coOrderedF: Future[DataFrame] =
-      if (edgesFresh) null
-      else for { (ps, _) <- pageSetsP.future; c <- canonF }
-        yield propsOf(Triples.coOrderedFromSets(ps, c)
-          .withColumn("sources", lit("web")), "sources")
-    val famFs: Seq[Future[DataFrame]] = if (edgesFresh) Nil else Seq(
-      fr(propsOf(Corpus.placedEdges(spark, sfDir), "year")),
-      frLf(lf => propsOf(Corpus.containsFrom(lf), "quantity", "extendedprice")),
-      fr(propsOf(Corpus.ofTypeEdges(spark, sfDir))),
-      fr(propsOf(Corpus.performedFrom(eventFacts), "n_events", "value_milli")),
-      fr(propsOf(Corpus.writtenInFrom(docFacts))),
-      fr(propsOf(Corpus.fromSourceFrom(docFacts))),
-      frLf(lf => propsOf(Corpus.fulfillsFrom(lf), "n_lines", "qty_milli")),
-      frLf(lf => propsOf(Corpus.supplyFrom(lf), "n_lines")),
-      fr(propsOf(Corpus.inRegionEdges(spark, sfDir))),
-      fr(propsOf(Corpus.brandedAsEdges(spark, sfDir))),
-      fr(propsOf(Corpus.inSegmentEdges(spark, sfDir))),
-      fr(propsOf(Corpus.fromNationEdges(spark, sfDir))),
-      frLf(lf => propsOf(Corpus.ratedFrom(lf), "med_qty_milli", "n_srcs")),
-      coOrderedF,
-      nearDupF match {
-        case null => null
-        case f => f.map(df => propsOf(df, "common", "size1", "size2"))
-      },
-      sharesPartF match {
-        case null => null
-        case f => f.map(df => propsOf(df, "n_common"))
-      },
-      coPurchasedF match {
-        case null => null
-        case f => f.map(df => propsOf(df, "n_common"))
-      },
-      fr(propsOf(Corpus.citesFrom(docFacts), "fp")),
-      fr(propsOf(Corpus.touchedEdges(spark, sfDir), "n_events", "value_milli")),
-      fr(propsOf(Corpus.peerOfEdges(spark, sfDir))),
-      fr(propsOf(Corpus.nextOrderEdges(spark, sfDir), "gap_days")),
-      frLf(lf => propsOf(Corpus.returnedFrom(lf), "n_returns", "qty_milli")),
-      frLf(lf => propsOf(Corpus.shipsToFrom(lf), "n_orders")),
-      fr(propsOf(Corpus.similarToFrom(docFacts), "hamming")),
-      fr(propsOf(followedBy, "n_times")),
-      fr(propsOf(Corpus.locatedInRegionEdges(spark, sfDir))),
-      frLf(lf => propsOf(Corpus.bestSupplierFrom(lf), "qty_milli")),
-      fr(propsOf(Corpus.closestPartEdges(spark, sfDir))),
-      // breadth block 5 — reference edge-vocabulary parity (40)
-      fr(propsOf(Corpus.inFamilyEdges(spark, sfDir))),
-      fr(propsOf(Corpus.variantOfEdges(spark, sfDir), "family")),
-      bundleWithF match {
-        case null => null
-        case f => f.map(df => propsOf(df, "n_common", "lift_milli"))
-      },
-      regulatesF match {
-        case null => null
-        case f => f.map(df => propsOf(df, "mode", "lift_milli"))
-      },
-      fr(propsOf(Corpus.prefersFrom(eventFacts), "n_events", "share_milli")),
-      frLf(lf => propsOf(Corpus.boughtFromFrom(lf), "n_orders", "days_span")),
-      fr(propsOf(Corpus.representativeOrderEdges(spark, sfDir), "totalprice_milli")),
-      frLf(lf => propsOf(Corpus.chargedWithFrom(lf), "n_items", "revenue_milli")),
-      fr(propsOf(Corpus.dominantLangFrom(docLangFacts), "n_docs", "share_milli")),
-      frLf(lf => propsOf(Corpus.handlesFrom(lf), "n_parts", "brands")))
-
-    // Stage 1: extract (+ per-row audit vs the reference text column).
-    // Explicit url-hash repartition happens BEFORE amplification: the
-    // shuffle moves only the base corpus (replicas explode map-side in
-    // place, 16× less shuffled bytes at mult=16) and per-page work stays
-    // uniformly spread because replicas of a page are interchangeable.
-    val extracted = GraphStore.getOrCompute(spark, storeBase, "extracted",
-        inputFp = fpExtract, lineageAsync = true) {
-      amplify(Corpus.pages(spark, sfDir)
-          .repartition(partitions, xxhash64(col("url"))), mult)
-        .select(
-          col("url"), col("warc_ts"), col("lang"),
-          HtmlText.htmlText(col("html")).as("text"),
-          xxhash64(col("text")).as("ref_hash"))
-        .withColumn("text_hash", xxhash64(col("text")))
-    }
-    mark("extract")
-    // Audit gates the mentions stage: a corrupt extraction must fail
-    // BEFORE a downstream snapshot derived from it can be committed and
-    // resumed (the audit is a two-int64-column scan of the committed
-    // parquet — cheap relative to the stage it guards).
-    val audit = extracted.filter(col("text_hash") =!= col("ref_hash")).count()
-    require(audit == 0, s"byte-identity audit failed on $audit pages")
-    // Plain count over the committed snapshot (parquet row-group
-    // metadata — no data scan); decides the hub-salting threshold below.
-    val nPages = extracted.count()
-
-    // canonF has long resolved by now (it only needs the part table);
-    // binding it here keeps the downstream code shape unchanged.
-    val canon = Await.result(canonF, Duration.Inf)
-    val lineFacts = Await.result(lineFactsF, Duration.Inf)
-
-    // Stage 2: mentions (broadcast trie; fact side never shuffles).
-    val mentions = GraphStore.getOrCompute(spark, storeBase, "mentions",
-        inputFp = fpMentions, lineageAsync = true) {
-      Linker.mentions(extracted.select("url", "text"), Corpus.aliasDict(spark, sfDir))
-    }
-    mark("mentions")
-    mark("canon_cc")
-
-    // Shared intermediate: per-page canonical entity sets — computed
-    // (scan + group of the big mentions table) ONCE, consumed by both
-    // the triple and the evidence/edge stages.
-    val pageSets = GraphStore.getOrCompute(spark, storeBase, "pagesets",
-        inputFp = s"pagesets-v1;$fpMentions;$fpCanon", lineageAsync = true) {
-      Triples.perPageEntitySets(mentions, canon)
-    }
-    // Hub-skew guard: past the page threshold, witness aggregation
-    // runs two-phase salted (value-hash cells) so a popular edge's
-    // fan-in spreads over 8 reducers before the bounded cap applies —
-    // bit-identical to the single-phase path by merge associativity.
-    pageSetsP.success((pageSets,
-      if (nPages >= Triples.SaltPageThreshold) Triples.DefaultEvidenceSalts
-      else 1))
-    // Triples is a reporting artifact (edges re-derive with evidence),
-    // so it runs concurrently with the nodes stage.
-    val triplesF = Future {
-      GraphStore.getOrCompute(spark, storeBase, "triples",
-        inputFp = fpTriples, lineageAsync = true) {
-        Triples.extractFromSets(pageSets, canon)
+    try {
+      var cLast = counters.snapshot
+      val marks = scala.collection.mutable.ArrayBuffer.empty[StageMark]
+      def mark(stage: String): Unit = {
+        // wall clock FIRST: the listener-bus drain (up to its 10 s
+        // timeout) is metrics-collection latency, not stage work — only
+        // the counter snapshot below needs the drained bus (ADVICE r5)
+        val now = System.nanoTime()
+        val cpuNow = osBean.getProcessCpuTime
+        graft.metrics.TaskCounters.drain(spark.sparkContext)
+        val c = counters.snapshot
+        val d = c.zip(cLast).map { case (a, b) => a - b }
+        println(f"[pipeline] $stage wall=${(now - tLast) / 1e9}%.1fs " +
+          f"cpu=${(cpuNow - cpuLast) / 1e9}%.1fs " +
+          f"taskRun=${d(0) / 1e3}%.1fs taskCpu=${d(1) / 1e9}%.1fs " +
+          f"shufW=${d(2) / 1e6}%.0fMB shufR=${d(3) / 1e6}%.0fMB " +
+          f"scan=${d(4) / 1e6}%.0fMB rows=${d(5)}")
+        marks += StageMark(stage, (now - tLast) / 1e9, d(0) / 1e3, d(1) / 1e9,
+          d(2) / 1e6, d(4) / 1e6, d(5))
+        tLast = now
+        cpuLast = cpuNow
+        cLast = c
       }
-    }
-    // The edges union PLAN: the evidence fusion chains on the pagesets
-    // commit + lineFacts, every other family frame was already built in
-    // a parallel future above (ALL 40 declared edge families — KgSchema
-    // — ride the same store path; the persisted graph IS the declared
-    // schema, not a subset; store census == q_graph_census, spec'd).
-    // The union itself folds as a balanced tree: a left fold re-analyzes
-    // a linearly growing plan per step (quadratic in family count) for
-    // the same flattened Union the optimizer produces either way.
-    val edgesPlanF: Future[DataFrame] = if (edgesFresh) null else {
-      import graft.merge.MergeSources
-      val fusedF = for { (ps, salts) <- pageSetsP.future; lf <- lineFactsF }
-        yield MergeSources.mergeAll(
-          Seq(Triples.evidenceFromSets(ps, canon, salts = salts),
-            Corpus.ledgerFrom(lf)),
-          keys = Seq("subject_id", "relation_label", "object_id"),
-          rules = Seq(
-            MergeSources.PipeSetUnion("sources"),
-            MergeSources.PipeSetUnion("evidence")))
-          .withColumn("properties", map(
-            lit("sources"), col("sources"),
-            lit("evidence"), col("evidence"),
-            lit("n_pages"), coalesce(col("n_pages"), lit(0L)).cast("string"),
-            lit("n_lines"), coalesce(col("n_lines"), lit(0L)).cast("string")))
-          .select(col("subject_id"), col("relation_label"), col("object_id"),
-            col("properties"))
-      def unionTree(dfs: Seq[DataFrame]): DataFrame =
-        if (dfs.size == 1) dfs.head
-        else unionTree(dfs.grouped(2).map(g =>
-          if (g.size == 2) g(0).unionByName(g(1)) else g(0)).toSeq)
-      for { fused <- fusedF; rest <- Future.sequence(famFs) }
-        yield unionTree(fused +: rest)
-    }
-    val nodes = Await.result(nodesF, Duration.Inf)
-    mark("nodes")
-    // Edges: multi-source fusion (web co-mentions + order ledger —
-    // sources/evidence set-union, reference ppi_adapter.py:1268-1303),
-    // then skip-bad-relationships at the sink (reference
-    // biocypher_config skip_bad_relationships) = endpoints must exist.
-    val edges = GraphStore.getOrCompute(spark, storeBase, "edges",
-        partitionByCols = Seq("bucket"), inputFp = fpEdges, lineageAsync = true) {
-      val ids = nodes.select(col("id"))
-      dbgPlan("edges", Await.result(edgesPlanF, Duration.Inf)
-        .join(ids.withColumnRenamed("id", "subject_id"), Seq("subject_id"), "left_semi")
-        .join(ids.withColumnRenamed("id", "object_id"), Seq("object_id"), "left_semi")
-        .withColumn("bucket", pmod(xxhash64(col("subject_id")), lit(32)))
-        // One exchange on the bucket key before the partitioned write:
-        // the ~40-family union otherwise leaves ~170 writing tasks that
-        // each open a file per bucket directory — 5,439 files averaging
-        // 7 KB at sf0.1, paid three times (write, lineage read-back,
-        // final count). After: one task per occupied bucket, 32
-        // right-sized files. Costs one shuffle of the final edge set
-        // (~40 MB zstd-equivalent), which the file-open savings repay.
-        .repartition(32, col("bucket")))
-    }
-    mark("edges")
-    lineFacts.unpersist(false)
-    followedBy.unpersist(false)
-    eventFacts.unpersist(false)
-    docFacts.unpersist(false)
-    docLangFacts.unpersist(false)
-    hotTables.foreach(_.unpersist(false))
 
-    Await.result(triplesF, Duration.Inf)
-    val nTriples = edges.count()
-    val nNodes = nodes.count()
-    GraphStore.awaitPending()
-    // Retention sweep (Iceberg expire_snapshots): re-runs with changed
-    // fingerprints accumulate superseded snapshots; keep the newest
-    // `retainSnapshots` per stage (latest always survives — resume
-    // semantics untouched) so the store's footprint stays bounded
-    // across the job's lifetime. Runs AFTER awaitPending: every
-    // in-flight commit has landed, so nothing newer-than-latest is a
-    // legitimate in-flight write.
-    if (retainSnapshots > 0)
-      Stages.foreach(GraphStore.expireSnapshots(storeBase, _, retainSnapshots))
-    mark("finalize")
-    spark.sparkContext.removeSparkListener(counters)
-    spark.conf.set("spark.sql.constraintPropagation.enabled", prevCP)
-    val secs = (System.nanoTime() - t0) / 1e9
-    Result(nPages, nTriples, nNodes, audit, secs, nTriples / secs, nPages / secs,
-      marks.toSeq)
+      // Per-stage input fingerprints: a changed corpus or parameterization
+      // invalidates downstream committed snapshots on resume (the manifest
+      // records the fp; GraphStore recomputes on mismatch).
+      val fpCorpus = s"corpus;sfDir=$sfDir;mult=$mult"
+      val fpExtract = s"extract-v2;$fpCorpus"
+      val fpMentions = s"mentions-trie-v2;$fpExtract;dict=aliasDict"
+      val fpCanon = s"canon-cc-v1;sfDir=$sfDir"
+      val fpTriples = s"triples-v1;$fpMentions;$fpCanon"
+      // v6 (round 4 final): the store persists the FULL declared schema —
+      // all 14 node types (complete relational entity universes plus the
+      // name-family vocabulary, not only text-mentioned ones) and all 40
+      // edge families (reference edge-vocabulary parity).
+      val fpNodes = s"nodes-typed-v6;$fpCanon;attrs=nodeAttrs;full-univ;" +
+        "+order+doc+ptype+fam+user+evt+lang+src+supp+region+brand+seg"
+      val fpEdges = s"edges-fused-v8;$fpMentions;$fpCanon;all-40-families-v1"
+
+      // Stage-commit pipelining: independent stages run as concurrent
+      // Spark jobs (the scheduler interleaves their tasks), and each
+      // commit's lineage read-back + manifest land asynchronously off the
+      // critical path (GraphStore.awaitPending at the end; a kill leaves
+      // manifest-less corpses that resume recomputes — same guarantee).
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+
+      // Stage 3/4 input: the CC-derived canonicalization table depends
+      // only on the source tables — overlap it with extract+mentions.
+      val canonF = Future {
+        GraphStore.getOrCompute(spark, storeBase, "canonical_ids",
+          inputFp = fpCanon, lineageAsync = true) {
+          Corpus.canonicalIds(spark, sfDir)
+        }
+      }
+
+      // Hot DIMENSION tables: the 20+ family builders each scan the base
+      // tables independently (Spark has no cross-subtree scan dedup);
+      // persisting turns ~20 re-scans into one scan + cache hits via
+      // CacheManager plan matching. persist() is lazy, so a resumed run
+      // (committed snapshots fresh) never materializes them. The persist
+      // is SIZE-GATED (r4 Wrong #2): a table is cached only when its scan
+      // estimate fits the cap, so at a 100× relational scale-up the
+      // fact-shaped tables fall out of the cache automatically and stream
+      // instead. `lineitem` is not listed at all — after the lineFacts
+      // fusion it has exactly ONE consumer; `documents` likewise (the
+      // docFacts fusion leaves only the touched-edges endpoint list).
+      val hotTables = Seq("orders", "customer", "part", "events")
+        .map(n => Corpus.table(spark, sfDir, n))
+        .filter(_.queryExecution.optimizedPlan.stats.sizeInBytes <= DimPersistMaxBytes)
+        .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      // Shared fact-grain aggregates (the lineFacts discipline applied to
+      // the other two fact-shaped inputs): eventFacts is the (user,
+      // event_type) grain of the event stream — four families (user /
+      // event-type nodes, performed / prefers edges) are marginal rollups
+      // over it; docFacts is ONE document-corpus scan computing metadata
+      // + fingerprint + SimHash + shingle/MinHash signatures for its
+      // seven consumers; docLangFacts rolls docFacts up to (source, lang).
+      // followed_by is both its own family and the regulates input.
+      // All persisted lazily — a resumed run never materializes them.
+      val eventFacts = Corpus.eventFacts(spark, sfDir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val docFacts = Corpus.docFacts(spark, sfDir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val docLangFacts = Corpus.docLangFactsFrom(docFacts)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val followedBy = Corpus.followedByEdges(spark, sfDir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // The SHARED line-fact projection (r4 Next #2): ~14 edge families
+      // all reduce the same enriched lineitem (⨝ orders ⨝ customer ⨝
+      // part ⨝ canon, dims broadcast). Built as a continuation of the
+      // canonicalization future and persisted lazily.
+      val lineFactsF: Future[DataFrame] = canonF.map { canon =>
+        Corpus.lineFacts(spark, sfDir, Some(canon))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }
+      // Each registry input resolved to this run's shared frame, ready
+      // as soon as the frame exists.
+      def source[A](in: Families.Input[A]): Future[A] = in match {
+        case Families.Dims => Future.successful((spark, sfDir))
+        case Families.LineFacts => lineFactsF
+        case Families.DocFacts => Future.successful(docFacts)
+        case Families.DocLangFacts => Future.successful(docLangFacts)
+        case Families.EventFacts => Future.successful(eventFacts)
+        case Families.FollowedBy => Future.successful(followedBy)
+        case Families.PageSets =>
+          for { (ps, _) <- pageSetsP.future; c <- canonF } yield (ps, c)
+      }
+
+      // The NODES stage depends on none of extract/mentions/canon —
+      // launched here as a concurrent commit whose jobs back-fill the
+      // extract and mentions stages' idle task slots (those two stages
+      // keep well under half the slots busy). Awaited before the edges
+      // stage, which semi-joins against the committed node ids.
+      val nodesF = Future {
+        GraphStore.getOrCompute(spark, storeBase, "nodes",
+            partitionByCols = Seq("bucket"), inputFp = fpNodes, lineageAsync = true) {
+          // Multi-adapter node merge (reference: one adapter per source —
+          // uniprot/drug/go/... — all landing in one typed node table):
+          // the COMPLETE relational entity universes + every registry node
+          // family, each schema-declared in KgSchema and conformance-
+          // checked by the same violations machinery. Complete universes
+          // also guarantee every declared edge family survives
+          // skip-bad-relationships intact (store census == graph census).
+          val plain = Families.nodes
+            .map { case f: Families.NodeFamily[a] =>
+              f.build(Await.result(source(f.input), Duration.Inf)) }
+            .map(_.withColumn("props_arr", map().cast("map<string,array<string>>"))
+              .withColumn("embedding", lit(null).cast("array<float>")))
+            .reduce(_ unionByName _)
+          // One exchange on the bucket key before the partitioned write:
+          // without it every upstream partition of the 12-family union
+          // writes its own file per bucket directory (~270 files of
+          // ~16 KB at sf0.1), and the write + lineage read-back pay the
+          // per-file open/close three times. After: one task per occupied
+          // bucket, 32 right-sized files.
+          Triples.nodesTyped(Corpus.relationalEntityNodes(spark, sfDir),
+              Corpus.nodeAttrs(spark, sfDir))
+            .unionByName(plain)
+            .withColumn("bucket", pmod(xxhash64(col("id")), lit(32)))
+            .repartition(32, col("bucket"))
+        }
+      }
+
+      // One future per registry edge family, on its input, building the
+      // family's frame through the uniform sink projection (declared
+      // props → string-encoded properties map). Building a frame runs the
+      // ANALYZER on its plan — single-threaded driver CPU — so the ~35
+      // frames are analyzed in parallel as their inputs appear instead of
+      // serially on the edges-plan await path. The `eager` families run
+      // Spark actions inside their builders and are submitted first: their
+      // jobs back-fill the extract/mentions stages' idle task slots. Resume
+      // discipline: when the edges snapshot is already fresh, no future is
+      // started and nothing here materializes. Job labels are thread-local,
+      // so each family's jobs stay attributable.
+      val edgesFresh =
+        GraphStore.committedFingerprint(storeBase, "edges").contains(fpEdges)
+      def edgeFrame[A](f: Families.EdgeFamily[A]): Future[DataFrame] =
+        source(f.input).map { in =>
+          spark.sparkContext.setJobDescription(s"edges: ${f.label}")
+          try KgSchema.edgeRows(f.label, f.build(in))
+          finally spark.sparkContext.setJobDescription(null)
+        }
+      val famFs: Seq[Future[DataFrame]] = if (edgesFresh) Nil else {
+        val launched = Families.edges.sortBy(!_.eager)
+          .map(f => f.label -> edgeFrame(f)).toMap
+        Families.edges.map(f => launched(f.label))
+      }
+
+      // Stage 1: extract (+ per-row audit vs the reference text column).
+      // Explicit url-hash repartition happens BEFORE amplification: the
+      // shuffle moves only the base corpus (replicas explode map-side in
+      // place, 16× less shuffled bytes at mult=16) and per-page work stays
+      // uniformly spread because replicas of a page are interchangeable.
+      val extracted = GraphStore.getOrCompute(spark, storeBase, "extracted",
+          inputFp = fpExtract, lineageAsync = true) {
+        amplify(Corpus.pages(spark, sfDir)
+            .repartition(partitions, xxhash64(col("url"))), mult)
+          .select(
+            col("url"), col("warc_ts"), col("lang"),
+            HtmlText.htmlText(col("html")).as("text"),
+            xxhash64(col("text")).as("ref_hash"))
+          .withColumn("text_hash", xxhash64(col("text")))
+      }
+      mark("extract")
+      // Audit gates the mentions stage: a corrupt extraction must fail
+      // BEFORE a downstream snapshot derived from it can be committed and
+      // resumed (the audit is a two-int64-column scan of the committed
+      // parquet — cheap relative to the stage it guards).
+      val audit = extracted.filter(col("text_hash") =!= col("ref_hash")).count()
+      require(audit == 0, s"byte-identity audit failed on $audit pages")
+      // Plain count over the committed snapshot (parquet row-group
+      // metadata — no data scan); decides the hub-salting threshold below.
+      val nPages = extracted.count()
+
+      // canonF has long resolved by now (it only needs the part table);
+      // binding it here keeps the downstream code shape unchanged.
+      val canon = Await.result(canonF, Duration.Inf)
+      val lineFacts = Await.result(lineFactsF, Duration.Inf)
+
+      // Stage 2: mentions (broadcast trie; fact side never shuffles).
+      val mentions = GraphStore.getOrCompute(spark, storeBase, "mentions",
+          inputFp = fpMentions, lineageAsync = true) {
+        Linker.mentions(extracted.select("url", "text"), Corpus.aliasDict(spark, sfDir))
+      }
+      mark("mentions")
+
+      // Shared intermediate: per-page canonical entity sets — computed
+      // (scan + group of the big mentions table) ONCE, consumed by both
+      // the triple and the evidence/edge stages.
+      val pageSets = GraphStore.getOrCompute(spark, storeBase, "pagesets",
+          inputFp = s"pagesets-v1;$fpMentions;$fpCanon", lineageAsync = true) {
+        Triples.perPageEntitySets(mentions, canon)
+      }
+      // Hub-skew guard: past the page threshold, witness aggregation
+      // runs two-phase salted (value-hash cells) so a popular edge's
+      // fan-in spreads over 8 reducers before the bounded cap applies —
+      // bit-identical to the single-phase path by merge associativity.
+      pageSetsP.success((pageSets,
+        if (nPages >= Triples.SaltPageThreshold) Triples.DefaultEvidenceSalts
+        else 1))
+      // Triples is a reporting artifact (edges re-derive with evidence),
+      // so it runs concurrently with the nodes stage.
+      val triplesF = Future {
+        GraphStore.getOrCompute(spark, storeBase, "triples",
+          inputFp = fpTriples, lineageAsync = true) {
+          Triples.extractFromSets(pageSets, canon)
+        }
+      }
+      // The edges union PLAN: the evidence fusion chains on the pagesets
+      // commit + lineFacts, every other family frame was already built in
+      // a parallel future above (ALL 40 declared edge families — KgSchema
+      // — ride the same store path; the persisted graph IS the declared
+      // schema, not a subset; store census == q_graph_census, spec'd).
+      // The union itself folds as a balanced tree: a left fold re-analyzes
+      // a linearly growing plan per step (quadratic in family count) for
+      // the same flattened Union the optimizer produces either way.
+      val edgesPlanF: Future[DataFrame] = if (edgesFresh) null else {
+        import graft.merge.MergeSources
+        // The fused frame carries both `ordered` and `located_in` rows;
+        // the two declare the same props. A count one source lacks is 0.
+        val fusedF = for { (ps, salts) <- pageSetsP.future; lf <- lineFactsF }
+          yield KgSchema.edgeRows("ordered", MergeSources.mergeAll(
+            Seq(Triples.evidenceFromSets(ps, canon, salts = salts),
+              Corpus.ledgerFrom(lf)),
+            keys = Seq("subject_id", "relation_label", "object_id"),
+            rules = Seq(
+              MergeSources.PipeSetUnion("sources"),
+              MergeSources.PipeSetUnion("evidence")))
+            .withColumn("n_pages", coalesce(col("n_pages"), lit(0L)))
+            .withColumn("n_lines", coalesce(col("n_lines"), lit(0L))))
+        def unionTree(dfs: Seq[DataFrame]): DataFrame =
+          if (dfs.size == 1) dfs.head
+          else unionTree(dfs.grouped(2).map(g =>
+            if (g.size == 2) g(0).unionByName(g(1)) else g(0)).toSeq)
+        for { fused <- fusedF; rest <- Future.sequence(famFs) }
+          yield unionTree(fused +: rest)
+      }
+      val nodes = Await.result(nodesF, Duration.Inf)
+      mark("nodes")
+      // Edges: multi-source fusion (web co-mentions + order ledger —
+      // sources/evidence set-union, reference ppi_adapter.py:1268-1303),
+      // then skip-bad-relationships at the sink (reference
+      // biocypher_config skip_bad_relationships) = endpoints must exist.
+      val edges = GraphStore.getOrCompute(spark, storeBase, "edges",
+          partitionByCols = Seq("bucket"), inputFp = fpEdges, lineageAsync = true) {
+        dbgPlan("edges", KgSchema.dropBadRelationships(
+            Await.result(edgesPlanF, Duration.Inf), nodes)
+          .withColumn("bucket", pmod(xxhash64(col("subject_id")), lit(32)))
+          // One exchange on the bucket key before the partitioned write:
+          // the ~40-family union otherwise leaves ~170 writing tasks that
+          // each open a file per bucket directory — 5,439 files averaging
+          // 7 KB at sf0.1, paid three times (write, lineage read-back,
+          // final count). After: one task per occupied bucket, 32
+          // right-sized files. Costs one shuffle of the final edge set
+          // (~40 MB zstd-equivalent), which the file-open savings repay.
+          .repartition(32, col("bucket")))
+      }
+      mark("edges")
+      lineFacts.unpersist(false)
+      followedBy.unpersist(false)
+      eventFacts.unpersist(false)
+      docFacts.unpersist(false)
+      docLangFacts.unpersist(false)
+      hotTables.foreach(_.unpersist(false))
+
+      Await.result(triplesF, Duration.Inf)
+      val nTriples = edges.count()
+      val nNodes = nodes.count()
+      GraphStore.awaitPending()
+      // Retention sweep (Iceberg expire_snapshots): re-runs with changed
+      // fingerprints accumulate superseded snapshots; keep the newest
+      // `retainSnapshots` per stage (latest always survives — resume
+      // semantics untouched) so the store's footprint stays bounded
+      // across the job's lifetime. Runs AFTER awaitPending: every
+      // in-flight commit has landed, so nothing newer-than-latest is a
+      // legitimate in-flight write.
+      if (retainSnapshots > 0)
+        Stages.foreach(GraphStore.expireSnapshots(storeBase, _, retainSnapshots))
+      mark("finalize")
+      val secs = (System.nanoTime() - t0) / 1e9
+      Result(nPages, nTriples, nNodes, audit, secs, nTriples / secs, nPages / secs,
+        marks.toSeq)
+    } catch {
+      case e: Throwable =>
+        pageSetsP.tryFailure(e)
+        throw e
+    } finally {
+      spark.sparkContext.removeSparkListener(counters)
+      spark.conf.set("spark.sql.constraintPropagation.enabled", prevCP)
+    }
   }
 }

@@ -554,11 +554,7 @@ object Corpus {
   /** User nodes (USER:k) aggregated from the event stream, with int
     * n_events, int micro-unit activity value (per-row integerization
     * BEFORE the sum keeps the prop summation-order-independent) and a
-    * derived bool. */
-  def userNodes(spark: SparkSession, sfDir: String): DataFrame =
-    userNodesFrom(eventFacts(spark, sfDir))
-
-  /** [[userNodes]] over a shared [[eventFacts]] frame: integer sums of
+    * derived bool, over a shared [[eventFacts]] frame: integer sums of
     * the (user, event_type) partials — associative, so bit-identical
     * to aggregating the raw stream. */
   def userNodesFrom(ef: DataFrame): DataFrame =
@@ -575,11 +571,8 @@ object Corpus {
           lit("total_value_milli"), col("value_milli").cast("string"),
           lit("is_active"), (col("n_events") >= 3).cast("string")).as("props"))
 
-  /** Event-type vocabulary nodes (EVT:name). */
-  def eventTypeNodes(spark: SparkSession, sfDir: String): DataFrame =
-    eventTypeNodesFrom(eventFacts(spark, sfDir))
-
-  /** [[eventTypeNodes]] over a shared [[eventFacts]] frame. */
+  /** Event-type vocabulary nodes (EVT:name) over a shared [[eventFacts]]
+    * frame. */
   def eventTypeNodesFrom(ef: DataFrame): DataFrame =
     ef.select(col("event_type")).distinct()
       .select(
@@ -615,11 +608,8 @@ object Corpus {
           lit("name"), col("lang"),
           lit("n_docs"), col("n_docs").cast("string")).as("props"))
 
-  /** Document-source vocabulary nodes (SRC:name). */
-  def sourceNodes(spark: SparkSession, sfDir: String): DataFrame =
-    sourceNodesFrom(docLangFacts(spark, sfDir))
-
-  /** [[sourceNodes]] over a shared [[docLangFacts]] frame. */
+  /** Document-source vocabulary nodes (SRC:name) over a shared
+    * [[docLangFacts]] frame. */
   def sourceNodesFrom(dlf: DataFrame): DataFrame =
     dlf.select(col("source")).distinct()
       .select(
@@ -666,23 +656,16 @@ object Corpus {
       lit("written_in").as("relation_label"),
       concat(lit("LANG:"), col("lang")).as("object_id"))
 
-  /** (DOC, from_source, SRC) edges. */
-  def fromSourceEdges(spark: SparkSession, sfDir: String): DataFrame =
-    fromSourceFrom(docFacts(spark, sfDir))
-
-  /** [[fromSourceEdges]] over a shared [[docFacts]] frame. */
+  /** (DOC, from_source, SRC) edges over a shared [[docFacts]] frame. */
   def fromSourceFrom(df: DataFrame): DataFrame =
     df.select(
       concat(lit("DOC:"), col("doc_id")).as("subject_id"),
       lit("from_source").as("relation_label"),
       concat(lit("SRC:"), regexp_replace(col("source"), " ", "_")).as("object_id"))
 
-  /** (SUPP, fulfills, ORDER) edges from the line-item ledger: int line
-    * count + int micro-unit quantity sum. */
-  def fulfillsEdges(spark: SparkSession, sfDir: String): DataFrame =
-    fulfillsFrom(lineFacts(spark, sfDir, None))
-
-  /** [[fulfillsEdges]] over a shared [[lineFacts]] frame. */
+  /** (SUPP, fulfills, ORDER) edges from the line-item ledger, over a
+    * shared [[lineFacts]] frame: int line count + int micro-unit
+    * quantity sum. */
   def fulfillsFrom(lf: DataFrame): DataFrame =
     lf.groupBy(col("sk"), col("ok"))
       .agg(
@@ -896,6 +879,17 @@ object Corpus {
         lit("similar_to").as("relation_label"),
         concat(lit("DOC:"), col("id2")).as("object_id"),
         col("hamming"))
+
+  /** (DOC, near_dup_of, DOC) — MinHash-LSH candidates verified by exact
+    * shingle Jaccard, over a shared [[docFacts]] frame (its precomputed
+    * `shc`/`sig` columns). */
+  def nearDupFrom(df: DataFrame): DataFrame =
+    graft.textops.DedupOps.minhashNearDupPairsFromSigs(df)
+      .select(
+        concat(lit("DOC:"), col("id1")).as("subject_id"),
+        lit("near_dup_of").as("relation_label"),
+        concat(lit("DOC:"), col("id2")).as("object_id"),
+        col("common"), col("size1"), col("size2"))
 
   /** (EVT, followed_by, EVT) — the event-type transition graph: per
     * user, consecutive events by (ts, event_id); transitions aggregated

@@ -64,47 +64,29 @@ object RelationalQueries {
         min(concat(col("l_returnflag"), col("l_linestatus"))).as(s"m_$i"),
         Aggs.pipeSetUnionAgg(col("l_orderkey").cast("string")).as(s"pm_$i"))
 
-  /** One census over EVERY relationally-derived node/edge family of
-    * the declared schema — (label, n) per-family cardinalities.
-    * Shared by q_graph_census (the driver-visible artifact) and
+  /** One census over every relationally-derived node/edge family of
+    * the registry ([[graft.schema.Families]]) — (label, n) per-family
+    * cardinalities. Left out: the page-derived families, which read the
+    * pipeline's page sets, and near_dup_of, which has a value-level
+    * oracle of its own (q_dup_edges). Shared by q_graph_census and
     * q_schema_rollup (the is_a lineage rollup over the same counts). */
   private def censusFrame(s: SparkSession, dir: String): DataFrame = {
+    import graft.schema.Families._
     val canon = Corpus.canonicalIds(s, dir)
-    val nodeFams = Seq(
-      Corpus.supplierNodes(s, dir), Corpus.regionNodes(s, dir),
-      Corpus.brandNodes(s, dir), Corpus.segmentNodes(s, dir),
-      Corpus.documentNodes(s, dir), Corpus.orderNodes(s, dir),
-      Corpus.ptypeNodes(s, dir), Corpus.userNodes(s, dir),
-      Corpus.eventTypeNodes(s, dir), Corpus.languageNodes(s, dir),
-      Corpus.sourceNodes(s, dir))
+    // Each input built standalone from the source tables.
+    def source[A](in: Input[A]): A = in match {
+      case Dims => (s, dir)
+      case LineFacts => Corpus.lineFacts(s, dir, Some(canon))
+      case DocFacts => Corpus.docFacts(s, dir)
+      case DocLangFacts => Corpus.docLangFacts(s, dir)
+      case EventFacts => Corpus.eventFacts(s, dir)
+      case FollowedBy => Corpus.followedByEdges(s, dir)
+      case PageSets => sys.error("page-derived families are not censused")
+    }
+    val nodeFams = nodes.map { case f: NodeFamily[a] => f.build(source(f.input)) }
       .map(_.select(col("label"), col("id").as("k")))
-    val edgeFams = Seq(
-      Corpus.inRegionEdges(s, dir), Corpus.placedEdges(s, dir),
-      Corpus.inSegmentEdges(s, dir), Corpus.fromNationEdges(s, dir),
-      Corpus.brandedAsEdges(s, dir),
-      Corpus.supplyEdges(s, dir, canon),
-      Corpus.containsEdges(s, dir, canon),
-      Corpus.ratedEdges(s, dir, canon),
-      Corpus.ofTypeEdges(s, dir), Corpus.performedEdges(s, dir),
-      Corpus.writtenInEdges(s, dir), Corpus.fromSourceEdges(s, dir),
-      Corpus.fulfillsEdges(s, dir),
-      // breadth blocks 3 + 4 (round 4)
-      Corpus.sharesPartEdges(s, dir, canon), Corpus.coPurchasedEdges(s, dir),
-      Corpus.citesEdges(s, dir), Corpus.touchedEdges(s, dir),
-      Corpus.peerOfEdges(s, dir), Corpus.nextOrderEdges(s, dir),
-      Corpus.returnedEdges(s, dir, canon), Corpus.shipsToEdges(s, dir),
-      Corpus.similarToEdges(s, dir), Corpus.followedByEdges(s, dir),
-      Corpus.locatedInRegionEdges(s, dir),
-      Corpus.bestSupplierEdges(s, dir, canon),
-      Corpus.closestPartEdges(s, dir),
-      // breadth block 5 (reference 40-edge-type parity)
-      Corpus.inFamilyEdges(s, dir), Corpus.variantOfEdges(s, dir),
-      Corpus.bundleWithEdges(s, dir, canon),
-      Corpus.regulatesEdges(s, dir), Corpus.prefersEdges(s, dir),
-      Corpus.boughtFromEdges(s, dir),
-      Corpus.representativeOrderEdges(s, dir),
-      Corpus.chargedWithEdges(s, dir), Corpus.dominantLangEdges(s, dir),
-      Corpus.handlesEdges(s, dir))
+    val edgeFams = edges.filter(f => f.input != PageSets && f.label != "near_dup_of")
+      .map { case f: EdgeFamily[a] => f.build(source(f.input)) }
       .map(_.select(col("relation_label").as("label"),
         concat(col("subject_id"), lit(">"), col("object_id")).as("k")))
     (nodeFams ++ edgeFams).reduce(_ unionByName _)

@@ -1,5 +1,6 @@
 package graft.schema
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,12 +41,13 @@ object KgSchema {
   /** `labelAsEdge`: the relationship-type name the edge carries in the
     * exported graph (reference `label_as_edge`, schema_config.yaml:146
     * — BioCypher's UPPER_SNAKE Neo4j relationship type); defaults to
-    * the uppercased relation label. */
+    * the uppercased relation label. `props` keeps its declared order:
+    * [[edgeRows]] folds the props into the stored map in that order. */
   final case class EdgeType(
       label: String,
       sourceLabel: String,
       targetLabel: String,
-      props: Map[String, PropType],
+      props: ListMap[String, PropType],
       isA: Option[String] = None,
       labelAsEdge: Option[String] = None)
 
@@ -95,84 +97,84 @@ object KgSchema {
     * mirror the reference's merged edges (ppi_adapter.py:1268-1303). */
   private val edgeTypes0: Map[String, EdgeType] = Map(
     "ordered" -> EdgeType("ordered", "customer", "product",
-      Map("sources" -> PStr, "evidence" -> PStr,
+      ListMap("sources" -> PStr, "evidence" -> PStr,
         "n_pages" -> PInt, "n_lines" -> PInt)),
     "located_in" -> EdgeType("located_in", "customer", "nation",
-      Map("sources" -> PStr, "evidence" -> PStr,
+      ListMap("sources" -> PStr, "evidence" -> PStr,
         "n_pages" -> PInt, "n_lines" -> PInt)),
     "co_ordered_with" -> EdgeType("co_ordered_with", "product", "product",
-      Map("sources" -> PStr)),
+      ListMap("sources" -> PStr)),
     "supplies" -> EdgeType("supplies", "supplier", "product",
-      Map("n_lines" -> PInt)),
+      ListMap("n_lines" -> PInt)),
     "in_region" -> EdgeType("in_region", "nation", "region",
-      Map.empty),
+      ListMap.empty),
     "placed" -> EdgeType("placed", "customer", "order",
-      Map("year" -> PInt)),
+      ListMap("year" -> PInt)),
     "contains" -> EdgeType("contains", "order", "product",
-      Map("quantity" -> PInt, "extendedprice" -> PFloat)),
-    "branded_as" -> EdgeType("branded_as", "product", "brand", Map.empty),
-    "in_segment" -> EdgeType("in_segment", "customer", "segment", Map.empty),
-    "from_nation" -> EdgeType("from_nation", "supplier", "nation", Map.empty),
+      ListMap("quantity" -> PInt, "extendedprice" -> PFloat)),
+    "branded_as" -> EdgeType("branded_as", "product", "brand", ListMap.empty),
+    "in_segment" -> EdgeType("in_segment", "customer", "segment", ListMap.empty),
+    "from_nation" -> EdgeType("from_nation", "supplier", "nation", ListMap.empty),
     "rated" -> EdgeType("rated", "supplier", "product",
-      Map("med_qty_milli" -> PInt, "n_srcs" -> PInt)),
+      ListMap("med_qty_milli" -> PInt, "n_srcs" -> PInt)),
     // Breadth block 2 (round 3).
-    "of_type" -> EdgeType("of_type", "product", "ptype", Map.empty),
+    "of_type" -> EdgeType("of_type", "product", "ptype", ListMap.empty),
     "performed" -> EdgeType("performed", "user", "event_type",
-      Map("n_events" -> PInt, "value_milli" -> PInt)),
-    "written_in" -> EdgeType("written_in", "document", "language", Map.empty),
-    "from_source" -> EdgeType("from_source", "document", "source", Map.empty),
+      ListMap("n_events" -> PInt, "value_milli" -> PInt)),
+    "written_in" -> EdgeType("written_in", "document", "language", ListMap.empty),
+    "from_source" -> EdgeType("from_source", "document", "source", ListMap.empty),
     "fulfills" -> EdgeType("fulfills", "supplier", "order",
-      Map("n_lines" -> PInt, "qty_milli" -> PInt)),
+      ListMap("n_lines" -> PInt, "qty_milli" -> PInt)),
     "near_dup_of" -> EdgeType("near_dup_of", "document", "document",
-      Map("common" -> PInt, "size1" -> PInt, "size2" -> PInt)),
+      ListMap("common" -> PInt, "size1" -> PInt, "size2" -> PInt)),
     // Breadth block 3 (round 4) — 25 edge families total.
     "shares_part" -> EdgeType("shares_part", "supplier", "supplier",
-      Map("n_common" -> PInt)),
+      ListMap("n_common" -> PInt)),
     "co_purchased_with" -> EdgeType("co_purchased_with", "order", "order",
-      Map("n_common" -> PInt)),
+      ListMap("n_common" -> PInt)),
     "cites" -> EdgeType("cites", "document", "document",
-      Map("fp" -> PInt)),
+      ListMap("fp" -> PInt)),
     "touched" -> EdgeType("touched", "user", "document",
-      Map("n_events" -> PInt, "value_milli" -> PInt)),
-    "peer_of" -> EdgeType("peer_of", "customer", "customer", Map.empty),
+      ListMap("n_events" -> PInt, "value_milli" -> PInt)),
+    "peer_of" -> EdgeType("peer_of", "customer", "customer", ListMap.empty),
     "next_order" -> EdgeType("next_order", "order", "order",
-      Map("gap_days" -> PInt)),
+      ListMap("gap_days" -> PInt)),
     "returned" -> EdgeType("returned", "customer", "product",
-      Map("n_returns" -> PInt, "qty_milli" -> PInt)),
+      ListMap("n_returns" -> PInt, "qty_milli" -> PInt)),
     "ships_to" -> EdgeType("ships_to", "supplier", "nation",
-      Map("n_orders" -> PInt)),
+      ListMap("n_orders" -> PInt)),
     // Breadth block 4 — 30 edge families at this point.
     "similar_to" -> EdgeType("similar_to", "document", "document",
-      Map("hamming" -> PInt)),
+      ListMap("hamming" -> PInt)),
     "followed_by" -> EdgeType("followed_by", "event_type", "event_type",
-      Map("n_times" -> PInt)),
+      ListMap("n_times" -> PInt)),
     "located_in_region" -> EdgeType("located_in_region", "customer", "region",
-      Map.empty),
+      ListMap.empty),
     "best_supplied_by" -> EdgeType("best_supplied_by", "product", "supplier",
-      Map("qty_milli" -> PInt)),
-    "closest_to" -> EdgeType("closest_to", "product", "product", Map.empty),
+      ListMap("qty_milli" -> PInt)),
+    "closest_to" -> EdgeType("closest_to", "product", "product", ListMap.empty),
     // Breadth block 5 — 40 edge families total (vs the reference's 39
     // ACTIVE association types, schema_config.yaml:206-606 uncommented
     // `represented_as: edge` entries).
-    "in_family" -> EdgeType("in_family", "product", "ptype", Map.empty),
+    "in_family" -> EdgeType("in_family", "product", "ptype", ListMap.empty),
     "variant_of" -> EdgeType("variant_of", "product", "product",
-      Map("family" -> PStr)),
+      ListMap("family" -> PStr)),
     "bundle_with" -> EdgeType("bundle_with", "product", "product",
-      Map("n_common" -> PInt, "lift_milli" -> PInt)),
+      ListMap("n_common" -> PInt, "lift_milli" -> PInt)),
     "regulates" -> EdgeType("regulates", "event_type", "event_type",
-      Map("mode" -> PStr, "lift_milli" -> PInt)),
+      ListMap("mode" -> PStr, "lift_milli" -> PInt)),
     "prefers" -> EdgeType("prefers", "user", "event_type",
-      Map("n_events" -> PInt, "share_milli" -> PInt)),
+      ListMap("n_events" -> PInt, "share_milli" -> PInt)),
     "bought_from" -> EdgeType("bought_from", "customer", "supplier",
-      Map("n_orders" -> PInt, "days_span" -> PInt)),
+      ListMap("n_orders" -> PInt, "days_span" -> PInt)),
     "representative_order" -> EdgeType("representative_order", "customer", "order",
-      Map("totalprice_milli" -> PInt)),
+      ListMap("totalprice_milli" -> PInt)),
     "charged_with" -> EdgeType("charged_with", "order", "ptype",
-      Map("n_items" -> PInt, "revenue_milli" -> PInt)),
+      ListMap("n_items" -> PInt, "revenue_milli" -> PInt)),
     "dominant_lang" -> EdgeType("dominant_lang", "source", "language",
-      Map("n_docs" -> PInt, "share_milli" -> PInt)),
+      ListMap("n_docs" -> PInt, "share_milli" -> PInt)),
     "handles" -> EdgeType("handles", "supplier", "ptype",
-      Map("n_parts" -> PInt, "brands" -> PStr)))
+      ListMap("n_parts" -> PInt, "brands" -> PStr)))
 
   // -----------------------------------------------------------------
   // is_a lineage (reference schema_config.yaml:207-215: every declared
@@ -454,6 +456,18 @@ object KgSchema {
         col("object_id").startsWith(nodeTypes(et.targetLabel).idPrefix)
     }.reduce(_ || _)
     edges.filter(!ok)
+  }
+
+  /** The uniform edge-sink projection: the declared props of `label`
+    * (named typed columns of `df`) fold into the `properties` map,
+    * string-encoded as the props-map value-typing contract requires. */
+  def edgeRows(label: String, df: DataFrame): DataFrame = {
+    val keys = edgeTypes(label).props.keys.toSeq
+    val m =
+      if (keys.isEmpty) map().cast("map<string,string>")
+      else map(keys.flatMap(k => Seq(lit(k), col(k).cast("string"))): _*)
+    df.select(col("subject_id"), col("relation_label"), col("object_id"),
+      m.as("properties"))
   }
 
   /** The bad-relationship skip (edges whose endpoints are not in the

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.schema.KgSchema
+import graft.schema.{Families, KgSchema}
 
 /** Conformance of the declared is_a lineage (reference
   * schema_config.yaml:207-215: every declared type carries an
@@ -79,5 +79,17 @@ class SchemaLineageSpec extends AnyFunSuite {
     assert(inputs.distinct.size == inputs.size)
     assert(KgSchema.nodeTypes("product").labelInInput.contains("part"))
     assert(KgSchema.nodeTypes("customer").labelInInput.contains("customer"))
+  }
+
+  test("family registry: unique labels, declared types, every edge family but the fused two") {
+    val edges = Families.edges.map(_.label)
+    assert(edges.distinct == edges)
+    // `ordered` and `located_in` come out of the fused evidence frame,
+    // which folds both through one prop list
+    assert(edges.toSet ++ Set("ordered", "located_in") == KgSchema.edgeTypes.keySet)
+    assert(KgSchema.edgeTypes("ordered").props == KgSchema.edgeTypes("located_in").props)
+    val nodes = Families.nodes.map(_.label)
+    assert(nodes.distinct == nodes)
+    assert(nodes.toSet.subsetOf(KgSchema.nodeTypes.keySet))
   }
 }

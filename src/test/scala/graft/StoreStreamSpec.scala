@@ -130,6 +130,19 @@ class StoreStreamSpec extends AnyFunSuite {
     }
   }
 
+  test("pipeline: a failing run throws and restores the session conf") {
+    val input = Files.createTempDirectory("sf_no_lineitem_")
+    Files.list(Paths.get(TestSpark.sf0001)).forEach { f =>
+      if (f.getFileName.toString != "lineitem.parquet")
+        Files.copy(f, input.resolve(f.getFileName))
+    }
+    val key = "spark.sql.constraintPropagation.enabled"
+    val before = spark.conf.get(key)
+    intercept[Exception](Pipeline.run(spark, input.toString,
+      Files.createTempDirectory("pipe_fail_").toString, partitions = 8))
+    assert(spark.conf.get(key) == before)
+  }
+
   test("store census == q_graph_census: every censused family persists at full cardinality") {
     val base = Files.createTempDirectory("pipe_census_").toString
     Pipeline.run(spark, TestSpark.sf0001, base, partitions = 8)
