@@ -206,7 +206,7 @@ object Pipeline {
       // as soon as the frame exists.
       def source[A](in: Families.Input[A]): Future[A] = in match {
         case Families.Dims => Future.successful((spark, sfDir))
-        case Families.LineFacts => lineFactsF
+        case Families.LineFacts | Families.RawLineFacts => lineFactsF
         case Families.DocFacts => Future.successful(docFacts)
         case Families.DocLangFacts => Future.successful(docLangFacts)
         case Families.EventFacts => Future.successful(eventFacts)

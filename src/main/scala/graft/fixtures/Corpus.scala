@@ -218,8 +218,8 @@ object Corpus {
   // ONE frame here; the pipeline computes + persists it ONCE and every
   // `*From(lf)` builder below is a pure group-by over it, so the edges
   // stage pays one fact scan + one orders join instead of ~12
-  // (the per-family standalone signatures delegate here so the oracle
-  // queries exercise the identical plan shape).
+  // (standalone, `graft.schema.Families.Standalone` builds the same
+  // frame, so the oracle queries exercise the identical plan shape).
   // -----------------------------------------------------------------
 
   /** Enriched line-level facts. Columns:
@@ -270,12 +270,8 @@ object Corpus {
   /** Second edge source for the merge layer (reference fuses multi-
     * source edges, ppi_adapter.py:1268-1303): 'ordered' edges derived
     * from the order ledger itself, with per-edge page evidence and a
-    * line count only this source carries. */
-  def ledgerEdges(spark: SparkSession, sfDir: String,
-                  canonTable: DataFrame): DataFrame =
-    ledgerFrom(lineFacts(spark, sfDir, Some(canonTable)))
-
-  /** [[ledgerEdges]] over a shared [[lineFacts]] frame. */
+    * line count only this source carries, over a shared [[lineFacts]]
+    * frame. */
   def ledgerFrom(lf: DataFrame): DataFrame = {
     // Bounded witness aggregation (BoundedAggs): lineitem rows are NOT
     // distinct per url here, so `total` is the exact LINE count while
@@ -317,12 +313,8 @@ object Corpus {
       map(lit("name"), col("r_name")).as("props"))
 
   /** (SUPP, supplies, PART-canonical) edges with per-edge line counts,
-    * canonicalized through the same rank-1 broadcast map. */
-  def supplyEdges(spark: SparkSession, sfDir: String,
-                  canonTable: DataFrame): DataFrame =
-    supplyFrom(lineFacts(spark, sfDir, Some(canonTable)))
-
-  /** [[supplyEdges]] over a shared [[lineFacts]] frame. */
+    * canonicalized through the same rank-1 broadcast map, over a shared
+    * [[lineFacts]] frame. */
   def supplyFrom(lf: DataFrame): DataFrame =
     lf.groupBy(
         concat(lit("SUPP:"), col("sk")).as("subject_id"),
@@ -404,11 +396,8 @@ object Corpus {
       .withColumn("sig", DedupOps.minhashSigOf(col("shc"), 64))
   }
 
-  /** Document nodes (DOC:k) with int n_chars and bool is_english. */
-  def documentNodes(spark: SparkSession, sfDir: String): DataFrame =
-    documentNodesFrom(docFacts(spark, sfDir))
-
-  /** [[documentNodes]] over a shared [[docFacts]] frame. */
+  /** Document nodes (DOC:k) with int n_chars and bool is_english, over
+    * a shared [[docFacts]] frame. */
   def documentNodesFrom(df: DataFrame): DataFrame =
     df.select(
       concat(lit("DOC:"), col("doc_id")).as("id"),
@@ -429,12 +418,8 @@ object Corpus {
 
   /** (ORDER, contains, PART-canonical) edges with int quantity and
     * float extendedprice (round(_,3)) props, canonicalized through the
-    * same broadcast rank-1 map as every other part edge. */
-  def containsEdges(spark: SparkSession, sfDir: String,
-                    canonTable: DataFrame): DataFrame =
-    containsFrom(lineFacts(spark, sfDir, Some(canonTable)))
-
-  /** [[containsEdges]] over a shared [[lineFacts]] frame. */
+    * same broadcast rank-1 map as every other part edge, over a shared
+    * [[lineFacts]] frame. */
   def containsFrom(lf: DataFrame): DataFrame =
     lf.groupBy(
         concat(lit("ORDER:"), col("ok")).as("subject_id"),
@@ -479,12 +464,8 @@ object Corpus {
   /** (SUPP, rated, PART-canonical) edges — the DTI-style numeric fusion
     * as a first-class edge family: per (supplier, canonical part) the
     * median of the per-line-number source sums (micro-units) + source
-    * count (drug_adapter.py merge_all_dtis shape over the supply KG). */
-  def ratedEdges(spark: SparkSession, sfDir: String,
-                 canonTable: DataFrame): DataFrame =
-    ratedFrom(lineFacts(spark, sfDir, Some(canonTable)))
-
-  /** [[ratedEdges]] over a shared [[lineFacts]] frame. */
+    * count (drug_adapter.py merge_all_dtis shape over the supply KG),
+    * over a shared [[lineFacts]] frame. */
   def ratedFrom(lf: DataFrame): DataFrame = {
     import graft.merge.MergeSources
     val perSrc = lf
@@ -584,21 +565,15 @@ object Corpus {
     * [[dominantLangFrom]] (edge), [[languageNodesFrom]] and
     * [[sourceNodesFrom]] (nodes) all reduce this grain — the pipeline
     * materializes it once (same fusion discipline as [[lineFacts]] /
-    * [[eventFacts]], one documents aggregation pass instead of three). */
-  def docLangFacts(spark: SparkSession, sfDir: String): DataFrame =
-    table(spark, sfDir, "documents")
-      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n"))
-
-  /** [[docLangFacts]] over a shared [[docFacts]] frame (the pipeline
-    * path: the vocabulary rollup reuses the persisted per-doc scan). */
+    * [[eventFacts]], one documents aggregation pass instead of three).
+    * `df` is the `documents` table or, in the pipeline, its shared
+    * [[docFacts]] frame (the vocabulary rollup reuses the persisted
+    * per-doc scan). */
   def docLangFactsFrom(df: DataFrame): DataFrame =
     df.groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n"))
 
-  /** Language nodes (LANG:code) with int document counts. */
-  def languageNodes(spark: SparkSession, sfDir: String): DataFrame =
-    languageNodesFrom(docLangFacts(spark, sfDir))
-
-  /** [[languageNodes]] over a shared [[docLangFacts]] frame. */
+  /** Language nodes (LANG:code) with int document counts, over a shared
+    * [[docLangFactsFrom]] frame. */
   def languageNodesFrom(dlf: DataFrame): DataFrame =
     dlf.groupBy(col("lang")).agg(sum(col("n")).as("n_docs"))
       .select(
@@ -609,7 +584,7 @@ object Corpus {
           lit("n_docs"), col("n_docs").cast("string")).as("props"))
 
   /** Document-source vocabulary nodes (SRC:name) over a shared
-    * [[docLangFacts]] frame. */
+    * [[docLangFactsFrom]] frame. */
   def sourceNodesFrom(dlf: DataFrame): DataFrame =
     dlf.select(col("source")).distinct()
       .select(
@@ -631,12 +606,9 @@ object Corpus {
   }
 
   /** (USER, performed, EVT) edges aggregated per (user, event type):
-    * int event count + int micro-unit value sum. */
-  def performedEdges(spark: SparkSession, sfDir: String): DataFrame =
-    performedFrom(eventFacts(spark, sfDir))
-
-  /** [[performedEdges]] over a shared [[eventFacts]] frame (the family
-    * IS that grain — a pure projection). */
+    * int event count + int micro-unit value sum, over a shared
+    * [[eventFacts]] frame (the family IS that grain — a pure
+    * projection). */
   def performedFrom(ef: DataFrame): DataFrame =
     ef
       .select(
@@ -645,11 +617,7 @@ object Corpus {
         concat(lit("EVT:"), col("event_type")).as("object_id"),
         col("n_events"), col("value_milli"))
 
-  /** (DOC, written_in, LANG) edges. */
-  def writtenInEdges(spark: SparkSession, sfDir: String): DataFrame =
-    writtenInFrom(docFacts(spark, sfDir))
-
-  /** [[writtenInEdges]] over a shared [[docFacts]] frame. */
+  /** (DOC, written_in, LANG) edges over a shared [[docFacts]] frame. */
   def writtenInFrom(df: DataFrame): DataFrame =
     df.select(
       concat(lit("DOC:"), col("doc_id")).as("subject_id"),
@@ -686,23 +654,19 @@ object Corpus {
   // DuckDB oracles.
   // -----------------------------------------------------------------
 
-  /** (SUPP, shares_part, SUPP) undirected canonical pairs — suppliers
-    * supplying >= 1 common canonical part, n_common = the distinct
-    * shared-part count (the drug-drug / comorbidity "shared neighbor"
-    * analogue, §2.5 pair discipline: numeric-key ordering k1 < k2).
-    * Built on the bounded inverted index (coOccurrencePairs): the
-    * per-part supplier posting is capped at [[CoOccurrenceMaxDf]]. */
   /** df cap for the co-occurrence families below: far above any
     * fixture-scale posting (no fixture effect), a hard bound at web
     * scale (one hot item's posting would otherwise emit d²/2 pairs);
     * modeled in the oracles the same way as ngram maxDf. */
   val CoOccurrenceMaxDf = 65536L
 
-  def sharesPartEdges(spark: SparkSession, sfDir: String,
-                      canonTable: DataFrame): DataFrame =
-    sharesPartFrom(lineFacts(spark, sfDir, Some(canonTable)))
-
-  /** [[sharesPartEdges]] over a shared [[lineFacts]] frame. */
+  /** (SUPP, shares_part, SUPP) undirected canonical pairs — suppliers
+    * supplying >= 1 common canonical part, n_common = the distinct
+    * shared-part count (the drug-drug / comorbidity "shared neighbor"
+    * analogue, §2.5 pair discipline: numeric-key ordering k1 < k2),
+    * over a shared [[lineFacts]] frame. Built on the bounded inverted
+    * index (coOccurrencePairs): the per-part supplier posting is capped
+    * at [[CoOccurrenceMaxDf]]. */
   def sharesPartFrom(lf: DataFrame): DataFrame = {
     val sp = supplyFrom(lf)
       .select(col("object_id").as("pid"),
@@ -718,11 +682,8 @@ object Corpus {
   /** (ORDER, co_purchased_with, ORDER) pairs — orders sharing >= 2
     * distinct raw parts (co-purchase, the §2.5 reciprocal-pair shape
     * over the order dimension). Postings per part are bounded by part
-    * popularity; the >= 2 threshold keeps the emitted pair set sparse. */
-  def coPurchasedEdges(spark: SparkSession, sfDir: String): DataFrame =
-    coPurchasedFrom(lineFacts(spark, sfDir, None))
-
-  /** [[coPurchasedEdges]] over a shared [[lineFacts]] frame. */
+    * popularity; the >= 2 threshold keeps the emitted pair set sparse.
+    * Over a shared [[lineFacts]] frame; reads no `cid`. */
   def coPurchasedFrom(lf: DataFrame): DataFrame = {
     val op = lf.select(col("pk"), col("ok"))
     graft.dedup.PairDedup.coOccurrencePairs(op, "pk", "ok", CoOccurrenceMaxDf,
@@ -738,12 +699,9 @@ object Corpus {
     * cites the document whose id is its text fingerprint (the portable
     * rolling hash, TextOps.fingerprint) mod the corpus size; self-
     * citations dropped. The derived-key-join family (J7) over document
-    * content rather than a stored key. */
-  def citesEdges(spark: SparkSession, sfDir: String): DataFrame =
-    citesFrom(docFacts(spark, sfDir))
-
-  /** [[citesEdges]] over a shared [[docFacts]] frame: the fingerprint
-    * is the frame's precomputed `fp` column (one token fold per row,
+    * content rather than a stored key. Over a shared [[docFacts]]
+    * frame: the fingerprint is the frame's precomputed `fp` column (one
+    * token fold per row,
     * shared with every other docFacts consumer); the corpus size stays
     * a LAZY broadcast scalar (the bundle_with pattern — no eager
     * count() at plan-build time, VERDICT r4 Wrong #4). */
@@ -823,12 +781,8 @@ object Corpus {
 
   /** (CUST, returned, PART-canonical) — the filtered multi-hop family:
     * return-flagged lineitems joined through orders to the customer,
-    * canonicalized, with int count + micro-unit quantity props. */
-  def returnedEdges(spark: SparkSession, sfDir: String,
-                    canonTable: DataFrame): DataFrame =
-    returnedFrom(lineFacts(spark, sfDir, Some(canonTable)))
-
-  /** [[returnedEdges]] over a shared [[lineFacts]] frame. */
+    * canonicalized, with int count + micro-unit quantity props, over a
+    * shared [[lineFacts]] frame. */
   def returnedFrom(lf: DataFrame): DataFrame =
     lf.filter(col("rf") === "R")
       .groupBy(
@@ -842,11 +796,8 @@ object Corpus {
 
   /** (SUPP, ships_to, NATION) — the multi-hop aggregation family:
     * supplier to the customer's nation through lineitem -> orders ->
-    * customer, n_orders = distinct orders shipped. */
-  def shipsToEdges(spark: SparkSession, sfDir: String): DataFrame =
-    shipsToFrom(lineFacts(spark, sfDir, None))
-
-  /** [[shipsToEdges]] over a shared [[lineFacts]] frame. */
+    * customer, n_orders = distinct orders shipped. Over a shared
+    * [[lineFacts]] frame; reads no `cid`. */
   def shipsToFrom(lf: DataFrame): DataFrame =
     lf.groupBy(col("sk"), col("cnat"))
       .agg(countDistinct(col("ok")).as("n_orders"))
@@ -865,12 +816,9 @@ object Corpus {
 
   /** (DOC, similar_to, DOC) — SimHash hamming <= 3 near-dup pairs over
     * the raw documents (the second dedup algorithm emitted as typed KG
-    * edges, alongside MinHash's near_dup_of). */
-  def similarToEdges(spark: SparkSession, sfDir: String): DataFrame =
-    similarToFrom(docFacts(spark, sfDir))
-
-  /** [[similarToEdges]] over a shared [[docFacts]] frame (the SimHash
-    * signature is the frame's precomputed `simsig` column). */
+    * edges, alongside MinHash's near_dup_of), over a shared
+    * [[docFacts]] frame (the SimHash signature is the frame's
+    * precomputed `simsig` column). */
   def similarToFrom(df: DataFrame): DataFrame =
     graft.textops.DedupOps.simhashNearDupPairsFromSigs(
         df.select(col("doc_id"), col("simsig").as("sig")))
@@ -924,12 +872,8 @@ object Corpus {
 
   /** (PART-canonical, best_supplied_by, SUPP) — the A1 top-1-per-group
     * pattern as an edge family: per canonical part, the supplier with
-    * the highest total quantity (micro-units; ties -> min suppkey). */
-  def bestSupplierEdges(spark: SparkSession, sfDir: String,
-                        canonTable: DataFrame): DataFrame =
-    bestSupplierFrom(lineFacts(spark, sfDir, Some(canonTable)))
-
-  /** [[bestSupplierEdges]] over a shared [[lineFacts]] frame. */
+    * the highest total quantity (micro-units; ties -> min suppkey),
+    * over a shared [[lineFacts]] frame. */
   def bestSupplierFrom(lf: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val agg = lf
@@ -1038,12 +982,8 @@ object Corpus {
     * order, <= 7 lineitems each) can never go hot; dfs and the order
     * total come from the same distinct (order, part) universe the
     * pairs do. floor(((n*1000)*N)/(df_a*df_b)) divides integer-exact
-    * doubles (all products < 2^53) — IEEE-identical in the oracle. */
-  def bundleWithEdges(spark: SparkSession, sfDir: String,
-                      canonTable: DataFrame): DataFrame =
-    bundleWithFrom(lineFacts(spark, sfDir, Some(canonTable)))
-
-  /** [[bundleWithEdges]] over a shared [[lineFacts]] frame. */
+    * doubles (all products < 2^53) — IEEE-identical in the oracle.
+    * Over a shared [[lineFacts]] frame. */
   def bundleWithFrom(lf: DataFrame): DataFrame = {
     val op = lf
       .select(col("ok"),
@@ -1080,14 +1020,10 @@ object Corpus {
     * against independence over the transition matrix; mode =
     * 'amplifies' when observed >= expected, 'dampens' otherwise, plus
     * the integer-milli lift. Three aggregation granularities (cell,
-    * row marginal, column marginal) joined back — all-integer score. */
-  def regulatesEdges(spark: SparkSession, sfDir: String): DataFrame =
-    regulatesFrom(followedByEdges(spark, sfDir))
-
-  /** Variant taking an already-built transition frame, so a pipeline
+    * row marginal, column marginal) joined back — all-integer score.
+    * Takes the already-built [[followedByEdges]] frame, so a pipeline
     * that also persists `followed_by` as its own family computes the
-    * event-succession window + aggregation ONCE (ADVICE r4: the
-    * single-arg overload recomputed it inside). */
+    * event-succession window + aggregation ONCE. */
   def regulatesFrom(transitions: DataFrame): DataFrame = {
     val t = transitions
       .select(col("subject_id").as("src"), col("object_id").as("dst"),
@@ -1117,13 +1053,9 @@ object Corpus {
   /** (USER, prefers, EVT) — the per-subject FREQUENCY family (drug to
     * side effect with frequency, schema_config.yaml:559-570): an event
     * type a user hits >= 2 times making up >= 25% of their stream;
-    * share in integer milli (two-level aggregation + ratio). */
-  def prefersEdges(spark: SparkSession, sfDir: String): DataFrame =
-    prefersFrom(eventFacts(spark, sfDir))
-
-  /** [[prefersEdges]] over a shared [[eventFacts]] frame: the per-type
-    * counts are the frame's own `n_events`; only the per-user total is
-    * a marginal rollup. */
+    * share in integer milli (two-level aggregation + ratio). Over a
+    * shared [[eventFacts]] frame: the per-type counts are the frame's
+    * own `n_events`; only the per-user total is a marginal rollup. */
   def prefersFrom(ef: DataFrame): DataFrame = {
     val perType = ef.select(col("user_id"), col("event_type"),
       col("n_events").as("n"))
@@ -1143,11 +1075,8 @@ object Corpus {
     * with a TEMPORAL span prop (organism taxon to disease,
     * schema_config.yaml:408-416): customer to supplier through
     * lineitem -> orders, n_orders = distinct orders, days_span = the
-    * day gap between first and last shipment. */
-  def boughtFromEdges(spark: SparkSession, sfDir: String): DataFrame =
-    boughtFromFrom(lineFacts(spark, sfDir, None))
-
-  /** [[boughtFromEdges]] over a shared [[lineFacts]] frame. */
+    * day gap between first and last shipment. Over a shared
+    * [[lineFacts]] frame; reads no `cid`. */
   def boughtFromFrom(lf: DataFrame): DataFrame =
     lf.groupBy(col("ck"), col("sk"))
       .agg(
@@ -1180,11 +1109,8 @@ object Corpus {
   /** (ORDER, charged_with, TYPE) — the fact-to-vocabulary membership
     * rollup (protein to pathway association, schema_config.yaml:
     * 505-515): an order's lineitems grouped by the part-type
-    * vocabulary with int count + per-row-integerized revenue. */
-  def chargedWithEdges(spark: SparkSession, sfDir: String): DataFrame =
-    chargedWithFrom(lineFacts(spark, sfDir, None))
-
-  /** [[chargedWithEdges]] over a shared [[lineFacts]] frame. */
+    * vocabulary with int count + per-row-integerized revenue. Over a
+    * shared [[lineFacts]] frame; reads no `cid`. */
   def chargedWithFrom(lf: DataFrame): DataFrame =
     lf.select(col("ok"), col("ptype"),
         floor(col("extprice") * (lit(1.0) - col("disc")) * 1000 + 0.5)
@@ -1200,11 +1126,8 @@ object Corpus {
   /** (SRC, dominant_lang, LANG) — the mode-per-group family: each
     * document source's most common language (ties -> lexicographic
     * min), with the doc count and integer-milli share of the source's
-    * corpus (argmax-of-count + ratio-to-total in one pass chain). */
-  def dominantLangEdges(spark: SparkSession, sfDir: String): DataFrame =
-    dominantLangFrom(docLangFacts(spark, sfDir))
-
-  /** [[dominantLangEdges]] over a shared [[docLangFacts]] frame. */
+    * corpus (argmax-of-count + ratio-to-total in one pass chain), over
+    * a shared [[docLangFactsFrom]] frame. */
   def dominantLangFrom(dlf: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val perLang = dlf
@@ -1231,11 +1154,8 @@ object Corpus {
     * prop (the reference's evidence-code lists on associations,
     * schema_config.yaml:249-258): distinct part count + the first-K
     * distinct brands (bounded top-K aggregator, '|'-joined, sorted) a
-    * supplier ships per part-type. */
-  def handlesEdges(spark: SparkSession, sfDir: String): DataFrame =
-    handlesFrom(lineFacts(spark, sfDir, None))
-
-  /** [[handlesEdges]] over a shared [[lineFacts]] frame. */
+    * supplier ships per part-type. Over a shared [[lineFacts]] frame;
+    * reads no `cid`. */
   def handlesFrom(lf: DataFrame): DataFrame = {
     val capAgg = graft.functions.BoundedAggs.pipeSetUnionCapped(HandlesBrandCap)
     lf.groupBy(col("sk"), col("ptype"))

@@ -90,9 +90,10 @@ object VectorExprs {
     * of `emb · plane(p + table*nPlanes)`, planes drawn from the fixed
     * integer mix `pmod((d+1)*2654435761 + (p'+1)*40503, 2^20)/2^19 - 1`
     * — the same portable formula the DuckDB oracles rebuild. Matches
-    * the unrolled Column form bit-for-bit: per-plane projections are
-    * sequential folds over d; a NaN projection sets no bit; any null
-    * element nullifies every projection, so the signature is 0. */
+    * its Column form (Knn.srpSignatureHof) bit-for-bit: per-plane
+    * projections are sequential folds over d; a NaN projection sets no
+    * bit; any null element nullifies every projection, so the
+    * signature is 0. */
   case class SrpSig(child: Expression, nPlanes: Int, table: Int)
       extends UnaryExpression {
 

@@ -2,8 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.fixtures.Corpus
 import graft.queries.CoreQueries.tune
+import graft.schema.Families
 
 /** Breadth blocks 3 + 4 + 5 (round 4): twenty-three further KG edge
   * families taking the declared schema to 40 edge types, past the
@@ -39,19 +39,43 @@ import graft.queries.CoreQueries.tune
   */
 object BreadthQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_shares_part" -> ((s, dir) => {
-      tune(s)
-      Corpus.sharesPartEdges(s, dir, Corpus.canonicalIds(s, dir))
-    }),
-    "q_co_purchased" -> ((s, dir) => {
-      tune(s)
-      Corpus.coPurchasedEdges(s, dir)
-    }),
-    "q_cites" -> ((s, dir) => {
-      tune(s)
-      Corpus.citesEdges(s, dir)
-    }),
+  /** The per-family queries: query name (a frozen oracle key) -> the
+    * registry family it returns, built standalone. */
+  private val familyQueries: Seq[(String, String)] = Seq(
+    "q_shares_part" -> "shares_part",
+    "q_co_purchased" -> "co_purchased_with",
+    "q_cites" -> "cites",
+    "q_touched" -> "touched",
+    "q_peer_of" -> "peer_of",
+    "q_next_order" -> "next_order",
+    "q_returned" -> "returned",
+    "q_ships_to" -> "ships_to",
+    // Breadth block 4.
+    "q_similar_to" -> "similar_to",
+    "q_followed_by" -> "followed_by",
+    "q_located_region" -> "located_in_region",
+    "q_best_supplier" -> "best_supplied_by",
+    "q_closest_part" -> "closest_to",
+    // Breadth block 5 — the declared schema reaches the reference's
+    // full 40-edge-type vocabulary.
+    "q_in_family" -> "in_family",
+    "q_variant_of" -> "variant_of",
+    "q_bundle_with" -> "bundle_with",
+    "q_regulates" -> "regulates",
+    "q_prefers" -> "prefers",
+    "q_bought_from" -> "bought_from",
+    "q_repr_order" -> "representative_order",
+    "q_charged_with" -> "charged_with",
+    "q_dominant_lang" -> "dominant_lang",
+    "q_handles" -> "handles")
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    familyQueries.map { case (q, label) =>
+      q -> ((s: SparkSession, dir: String) => {
+        tune(s)
+        Families.Standalone(s, dir).edges(label)
+      })
+    }.toMap ++ Map[String, (SparkSession, String) => DataFrame](
     // Entity salience = exact fixed-point integer PageRank over the
     // citation graph (graph.PageRank — bit-identical at any
     // parallelism; the oracle replays all five rounds as generated
@@ -59,92 +83,9 @@ object BreadthQueries {
     "q_salience" -> ((s, dir) => {
       tune(s)
       graft.graph.PageRank.salience(
-        Corpus.citesEdges(s, dir)
+        Families.Standalone(s, dir).edges("cites")
           .select(col("subject_id").as("src"), col("object_id").as("dst")),
         iters = SalienceIters)
-    }),
-    "q_touched" -> ((s, dir) => {
-      tune(s)
-      Corpus.touchedEdges(s, dir)
-    }),
-    "q_peer_of" -> ((s, dir) => {
-      tune(s)
-      Corpus.peerOfEdges(s, dir)
-    }),
-    "q_next_order" -> ((s, dir) => {
-      tune(s)
-      Corpus.nextOrderEdges(s, dir)
-    }),
-    "q_returned" -> ((s, dir) => {
-      tune(s)
-      Corpus.returnedEdges(s, dir, Corpus.canonicalIds(s, dir))
-    }),
-    "q_ships_to" -> ((s, dir) => {
-      tune(s)
-      Corpus.shipsToEdges(s, dir)
-    }),
-    // Breadth block 4.
-    "q_similar_to" -> ((s, dir) => {
-      tune(s)
-      Corpus.similarToEdges(s, dir)
-    }),
-    "q_followed_by" -> ((s, dir) => {
-      tune(s)
-      Corpus.followedByEdges(s, dir)
-    }),
-    "q_located_region" -> ((s, dir) => {
-      tune(s)
-      Corpus.locatedInRegionEdges(s, dir)
-    }),
-    "q_best_supplier" -> ((s, dir) => {
-      tune(s)
-      Corpus.bestSupplierEdges(s, dir, Corpus.canonicalIds(s, dir))
-    }),
-    "q_closest_part" -> ((s, dir) => {
-      tune(s)
-      Corpus.closestPartEdges(s, dir)
-    }),
-    // Breadth block 5 — the declared schema reaches the reference's
-    // full 40-edge-type vocabulary.
-    "q_in_family" -> ((s, dir) => {
-      tune(s)
-      Corpus.inFamilyEdges(s, dir)
-    }),
-    "q_variant_of" -> ((s, dir) => {
-      tune(s)
-      Corpus.variantOfEdges(s, dir)
-    }),
-    "q_bundle_with" -> ((s, dir) => {
-      tune(s)
-      Corpus.bundleWithEdges(s, dir, Corpus.canonicalIds(s, dir))
-    }),
-    "q_regulates" -> ((s, dir) => {
-      tune(s)
-      Corpus.regulatesEdges(s, dir)
-    }),
-    "q_prefers" -> ((s, dir) => {
-      tune(s)
-      Corpus.prefersEdges(s, dir)
-    }),
-    "q_bought_from" -> ((s, dir) => {
-      tune(s)
-      Corpus.boughtFromEdges(s, dir)
-    }),
-    "q_repr_order" -> ((s, dir) => {
-      tune(s)
-      Corpus.representativeOrderEdges(s, dir)
-    }),
-    "q_charged_with" -> ((s, dir) => {
-      tune(s)
-      Corpus.chargedWithEdges(s, dir)
-    }),
-    "q_dominant_lang" -> ((s, dir) => {
-      tune(s)
-      Corpus.dominantLangEdges(s, dir)
-    }),
-    "q_handles" -> ((s, dir) => {
-      tune(s)
-      Corpus.handlesEdges(s, dir)
     }),
     // Graph-traversal semantics over an emitted edge family: 2-paths
     // (a)-[next_order]->(b)-[next_order]->(c) with the accumulated day
@@ -153,7 +94,7 @@ object BreadthQueries {
     // here the same semantics as a plain oracle-checked self-join.
     "q_two_hop" -> ((s, dir) => {
       tune(s)
-      val e = Corpus.nextOrderEdges(s, dir)
+      val e = Families.Standalone(s, dir).edges("next_order")
       val a = e.select(col("subject_id").as("a"), col("object_id").as("b"),
         col("gap_days").as("g1"))
       val b = e.select(col("subject_id").as("b2"), col("object_id").as("c"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.Corpus
 import graft.extract.HtmlText
 import graft.link.Linker
+import graft.schema.Families
 import graft.triples.Triples
 
 /** Core KG-construction pipeline queries (north-rule stages 1-4), each
@@ -263,7 +264,7 @@ object CoreQueries {
       val mentions = Linker.mentions(pages, Corpus.aliasDict(s, dir))
       val canon = Corpus.canonicalIds(s, dir)
       val web = Triples.extractEvidence(mentions, canon)
-      val ledger = Corpus.ledgerEdges(s, dir, canon)
+      val ledger = Corpus.ledgerFrom(Corpus.lineFacts(s, dir, Some(canon)))
       MergeSources.mergeAll(Seq(web, ledger),
           keys = Seq("subject_id", "relation_label", "object_id"),
           rules = Seq(
@@ -279,7 +280,7 @@ object CoreQueries {
     // supplies/in_region edges, canonicalized through the same map.
     "q_supply_edges" -> ((s, dir) => {
       tune(s)
-      Corpus.supplyEdges(s, dir, Corpus.canonicalIds(s, dir))
+      Families.Standalone(s, dir).edges("supplies")
     }),
     "q_typed_layers" -> ((s, dir) => {
       tune(s)
@@ -310,25 +311,25 @@ object CoreQueries {
     // uniform (subject, label, object, p_int, p_milli) projection.
     "q_typed_edges" -> ((s, dir) => {
       tune(s)
-      val canon = Corpus.canonicalIds(s, dir)
+      val fam = Families.Standalone(s, dir)
       val nullL = lit(null).cast("long")
-      Corpus.placedEdges(s, dir)
+      fam.edges("placed")
         .select(col("subject_id"), col("relation_label"), col("object_id"),
           col("year").as("p_int"), nullL.as("p_milli"))
-        .unionByName(Corpus.containsEdges(s, dir, canon)
+        .unionByName(fam.edges("contains")
           .select(col("subject_id"), col("relation_label"), col("object_id"),
             col("quantity").as("p_int"),
             (col("extendedprice_cents") * 10).as("p_milli")))
-        .unionByName(Corpus.brandedAsEdges(s, dir)
+        .unionByName(fam.edges("branded_as")
           .select(col("subject_id"), col("relation_label"), col("object_id"),
             nullL.as("p_int"), nullL.as("p_milli")))
-        .unionByName(Corpus.inSegmentEdges(s, dir)
+        .unionByName(fam.edges("in_segment")
           .select(col("subject_id"), col("relation_label"), col("object_id"),
             nullL.as("p_int"), nullL.as("p_milli")))
-        .unionByName(Corpus.fromNationEdges(s, dir)
+        .unionByName(fam.edges("from_nation")
           .select(col("subject_id"), col("relation_label"), col("object_id"),
             nullL.as("p_int"), nullL.as("p_milli")))
-        .unionByName(Corpus.ratedEdges(s, dir, canon)
+        .unionByName(fam.edges("rated")
           .select(col("subject_id"), col("relation_label"), col("object_id"),
             col("n_srcs").as("p_int"), col("med_qty_milli").as("p_milli")))
     }),

@@ -8,6 +8,7 @@ import graft.merge.MergeSources.{FirstNonNull, OrderedConcat, PipeSetUnion}
 import graft.dedup.PairDedup
 import graft.functions.{Aggs, StringFns}
 import graft.queries.CoreQueries.tune
+import graft.schema.Families
 
 /** The reference's relational operator vocabulary (SURVEY.md §2.2-2.9)
   * exercised over the driver tables, each with a DuckDB oracle. The
@@ -71,22 +72,12 @@ object RelationalQueries {
     * oracle of its own (q_dup_edges). Shared by q_graph_census and
     * q_schema_rollup (the is_a lineage rollup over the same counts). */
   private def censusFrame(s: SparkSession, dir: String): DataFrame = {
-    import graft.schema.Families._
-    val canon = Corpus.canonicalIds(s, dir)
-    // Each input built standalone from the source tables.
-    def source[A](in: Input[A]): A = in match {
-      case Dims => (s, dir)
-      case LineFacts => Corpus.lineFacts(s, dir, Some(canon))
-      case DocFacts => Corpus.docFacts(s, dir)
-      case DocLangFacts => Corpus.docLangFacts(s, dir)
-      case EventFacts => Corpus.eventFacts(s, dir)
-      case FollowedBy => Corpus.followedByEdges(s, dir)
-      case PageSets => sys.error("page-derived families are not censused")
-    }
-    val nodeFams = nodes.map { case f: NodeFamily[a] => f.build(source(f.input)) }
+    val fam = Families.Standalone(s, dir)
+    val nodeFams = Families.nodes.map(f => fam.nodes(f.label))
       .map(_.select(col("label"), col("id").as("k")))
-    val edgeFams = edges.filter(f => f.input != PageSets && f.label != "near_dup_of")
-      .map { case f: EdgeFamily[a] => f.build(source(f.input)) }
+    val edgeFams = Families.edges
+      .filter(f => f.input != Families.PageSets && f.label != "near_dup_of")
+      .map(f => fam.edges(f.label))
       .map(_.select(col("relation_label").as("label"),
         concat(col("subject_id"), lit(">"), col("object_id")).as("k")))
     (nodeFams ++ edgeFams).reduce(_ unionByName _)
@@ -239,13 +230,14 @@ object RelationalQueries {
     // per-row BEFORE the sum — summation-order-independent).
     "q_user_events" -> ((s, dir) => {
       tune(s)
-      Corpus.performedEdges(s, dir)
+      Families.Standalone(s, dir).edges("performed")
     }),
     // Document-metadata edges carrying the language node's int prop.
     "q_doc_graph" -> ((s, dir) => {
       tune(s)
-      Corpus.writtenInEdges(s, dir).join(
-        Corpus.languageNodes(s, dir)
+      val fam = Families.Standalone(s, dir)
+      fam.edges("written_in").join(
+        fam.nodes("language")
           .select(col("id").as("object_id"),
             col("props")("n_docs").cast("long").as("n_docs")),
         "object_id")

@@ -11,7 +11,9 @@ import graft.triples.Triples
   * shared input it reads and its builder over that input; its prop keys
   * are its [[KgSchema.EdgeType]]'s, folded in by [[KgSchema.edgeRows]].
   * The pipeline's family frames and the census query derive from these
-  * lists, so a new family is one `EdgeType` plus one entry here.
+  * lists, and every standalone family frame (the oracle queries, the
+  * specs) is built through [[Standalone]], so a new family is one
+  * `EdgeType` plus one entry here.
   *
   * Families are grouped by shared join path (the path-concatenation
   * idea): all families over one fact input reduce that one shared
@@ -25,9 +27,14 @@ object Families {
   case object Dims extends Input[(SparkSession, String)]
   /** [[Corpus.lineFacts]] with the canonical part ids joined in. */
   case object LineFacts extends Input[DataFrame]
+  /** [[Corpus.lineFacts]] for builders that never read `cid`: the
+    * pipeline hands them its shared LineFacts frame, a standalone build
+    * skips the canonical-id join (and its connected-components plan). */
+  case object RawLineFacts extends Input[DataFrame]
   /** [[Corpus.docFacts]]. */
   case object DocFacts extends Input[DataFrame]
-  /** [[Corpus.docLangFactsFrom]] the DocFacts frame. */
+  /** [[Corpus.docLangFactsFrom]]: the documents' (source, lang) rollup
+    * (the pipeline rolls up its DocFacts frame). */
   case object DocLangFacts extends Input[DataFrame]
   /** [[Corpus.eventFacts]]. */
   case object EventFacts extends Input[DataFrame]
@@ -55,7 +62,7 @@ object Families {
     EdgeFamily("performed", EventFacts, Corpus.performedFrom),
     EdgeFamily("written_in", DocFacts, Corpus.writtenInFrom),
     EdgeFamily("from_source", DocFacts, Corpus.fromSourceFrom),
-    EdgeFamily("fulfills", LineFacts, Corpus.fulfillsFrom),
+    EdgeFamily("fulfills", RawLineFacts, Corpus.fulfillsFrom),
     EdgeFamily("supplies", LineFacts, Corpus.supplyFrom),
     EdgeFamily("in_region", Dims, (Corpus.inRegionEdges _).tupled),
     EdgeFamily("branded_as", Dims, (Corpus.brandedAsEdges _).tupled),
@@ -66,13 +73,13 @@ object Families {
       Triples.coOrderedFromSets(ps._1, ps._2).withColumn("sources", lit("web"))),
     EdgeFamily("near_dup_of", DocFacts, Corpus.nearDupFrom, eager = true),
     EdgeFamily("shares_part", LineFacts, Corpus.sharesPartFrom, eager = true),
-    EdgeFamily("co_purchased_with", LineFacts, Corpus.coPurchasedFrom, eager = true),
+    EdgeFamily("co_purchased_with", RawLineFacts, Corpus.coPurchasedFrom, eager = true),
     EdgeFamily("cites", DocFacts, Corpus.citesFrom),
     EdgeFamily("touched", Dims, (Corpus.touchedEdges _).tupled),
     EdgeFamily("peer_of", Dims, (Corpus.peerOfEdges _).tupled),
     EdgeFamily("next_order", Dims, (Corpus.nextOrderEdges _).tupled),
     EdgeFamily("returned", LineFacts, Corpus.returnedFrom),
-    EdgeFamily("ships_to", LineFacts, Corpus.shipsToFrom),
+    EdgeFamily("ships_to", RawLineFacts, Corpus.shipsToFrom),
     EdgeFamily("similar_to", DocFacts, Corpus.similarToFrom),
     EdgeFamily("followed_by", FollowedBy, identity[DataFrame]),
     EdgeFamily("located_in_region", Dims, (Corpus.locatedInRegionEdges _).tupled),
@@ -83,12 +90,12 @@ object Families {
     EdgeFamily("bundle_with", LineFacts, Corpus.bundleWithFrom, eager = true),
     EdgeFamily("regulates", FollowedBy, Corpus.regulatesFrom, eager = true),
     EdgeFamily("prefers", EventFacts, Corpus.prefersFrom),
-    EdgeFamily("bought_from", LineFacts, Corpus.boughtFromFrom),
+    EdgeFamily("bought_from", RawLineFacts, Corpus.boughtFromFrom),
     EdgeFamily("representative_order", Dims,
       (Corpus.representativeOrderEdges _).tupled),
-    EdgeFamily("charged_with", LineFacts, Corpus.chargedWithFrom),
+    EdgeFamily("charged_with", RawLineFacts, Corpus.chargedWithFrom),
     EdgeFamily("dominant_lang", DocLangFacts, Corpus.dominantLangFrom),
-    EdgeFamily("handles", LineFacts, Corpus.handlesFrom))
+    EdgeFamily("handles", RawLineFacts, Corpus.handlesFrom))
 
   /** In nodes-union order, after the mention-derived typed entities. */
   val nodes: Seq[NodeFamily[_]] = Seq(
@@ -103,4 +110,36 @@ object Families {
     NodeFamily("region", Dims, (Corpus.regionNodes _).tupled),
     NodeFamily("brand", Dims, (Corpus.brandNodes _).tupled),
     NodeFamily("segment", Dims, (Corpus.segmentNodes _).tupled))
+
+  /** Every input built standalone from the source tables, with one
+    * canonical-id table per resolver, built on first use. */
+  final case class Standalone(spark: SparkSession, sfDir: String) {
+    private lazy val canon = Corpus.canonicalIds(spark, sfDir)
+
+    def source[A](in: Input[A]): A = in match {
+      case Dims => (spark, sfDir)
+      case LineFacts => Corpus.lineFacts(spark, sfDir, Some(canon))
+      case RawLineFacts => Corpus.lineFacts(spark, sfDir, None)
+      case DocFacts => Corpus.docFacts(spark, sfDir)
+      case DocLangFacts =>
+        Corpus.docLangFactsFrom(Corpus.table(spark, sfDir, "documents"))
+      case EventFacts => Corpus.eventFacts(spark, sfDir)
+      case FollowedBy => Corpus.followedByEdges(spark, sfDir)
+      case PageSets => sys.error("page-derived families read the pipeline's page sets")
+    }
+
+    /** The registry edge family `label`, built over its standalone input. */
+    def edges(label: String): DataFrame =
+      Families.edges.find(_.label == label) match {
+        case Some(f: EdgeFamily[a]) => f.build(source(f.input))
+        case None => throw new NoSuchElementException(s"no edge family $label")
+      }
+
+    /** The registry node family `label`, built over its standalone input. */
+    def nodes(label: String): DataFrame =
+      Families.nodes.find(_.label == label) match {
+        case Some(f: NodeFamily[a]) => f.build(source(f.input))
+        case None => throw new NoSuchElementException(s"no node family $label")
+      }
+  }
 }

@@ -74,20 +74,24 @@ object Knn {
   /** Sign-random-projection bucket signature (nPlanes bits) per vector —
     * the LSH/IVF-style coarse quantizer. `table` offsets the plane set
     * so multiple independent tables share one formula. Native codegen'd
-    * loop; [[srpSignatureUnrolled]] is the Column form it matches
+    * loop; [[srpSignatureHof]] is the Column form it matches
     * bit-for-bit. The projection dimensionality is the runtime array
     * length (no `dim` parameter — a dim smaller than the array would
     * silently be ignored, so the API doesn't offer one). */
   def srpSignature(emb: Column, nPlanes: Int, table: Int = 0): Column =
     graft.functions.VectorExprs.srpSig(emb, nPlanes, table)
 
-  /** The unrolled per-plane Column formulation of [[srpSignature]] —
-    * kept as the executable specification of the native expression. */
-  def srpSignatureUnrolled(emb: Column, dim: Int, nPlanes: Int, table: Int = 0): Column = {
+  /** The per-plane Column formulation of [[srpSignature]] — kept as the
+    * executable specification of the native expression. Each plane's
+    * projection is one sequential double fold over d = 0..dim-1 (seed
+    * 0.0), as an `aggregate`: a `dim`-deep Column tree outgrows codegen
+    * at reference widths and its interpreted fallback can overflow an
+    * executor's stack. */
+  def srpSignatureHof(emb: Column, dim: Int, nPlanes: Int, table: Int = 0): Column = {
     val bits = (0 until nPlanes).map { p =>
-      val proj = (0 until dim).map(d =>
-        element_at(emb, d + 1).cast("double") * coeff(p + table * nPlanes, lit(d)))
-        .reduce(_ + _)
+      val terms = transform(slice(emb, 1, dim),
+        (x, d) => x.cast("double") * coeff(p + table * nPlanes, d))
+      val proj = aggregate(terms, lit(0.0), (acc, t) => acc + t)
       when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
     }
     bits.reduce((a, b) => a.bitwiseOR(b))

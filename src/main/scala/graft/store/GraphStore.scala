@@ -59,18 +59,24 @@ object GraphStore {
   private def snapDir(base: String, stage: String, n: Long): Path =
     stageDir(base, stage).resolve(s"snapshot=$n")
 
-  /** Highest committed (manifest-present) snapshot id, or -1. */
-  def latestSnapshot(base: String, stage: String): Long = {
+  /** Every `snapshot=<n>` id under a stage — committed or corpse — in
+    * directory-listing order. */
+  private def snapshotIds(base: String, stage: String): Seq[Long] = {
     val d = stageDir(base, stage)
-    if (!Files.isDirectory(d)) return -1L
+    if (!Files.isDirectory(d)) return Nil
     val s = Files.list(d)
-    try s.iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("snapshot="))
-      .filter(p => Files.exists(p.resolve("manifest.json")))
-      .map(_.getFileName.toString.stripPrefix("snapshot=").toLong)
-      .foldLeft(-1L)(math.max)
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("snapshot="))
+      .map(_.stripPrefix("snapshot=").toLong).toSeq
     finally s.close()
   }
+
+  private def isCommitted(base: String, stage: String, n: Long): Boolean =
+    Files.exists(snapDir(base, stage, n).resolve("manifest.json"))
+
+  /** Highest committed (manifest-present) snapshot id, or -1. */
+  def latestSnapshot(base: String, stage: String): Long =
+    snapshots(base, stage).lastOption.getOrElse(-1L)
 
   /** The input fingerprint recorded in a committed snapshot's manifest,
     * or None for an uncommitted stage. Missing field (pre-fingerprint
@@ -108,8 +114,7 @@ object GraphStore {
     * call committed, false if the batch was already committed. */
   def commitBatch(spark: SparkSession, base: String, stage: String,
                   batchId: Long, df: DataFrame, inputFp: String = ""): Boolean = {
-    if (Files.exists(snapDir(base, stage, batchId).resolve("manifest.json")))
-      false
+    if (isCommitted(base, stage, batchId)) false
     else {
       writeSnapshot(spark, base, stage, batchId, df, Nil, inputFp,
         lineageAsync = false)
@@ -123,15 +128,8 @@ object GraphStore {
     * whole-stage-replacement model. */
   def readAllSnapshots(spark: SparkSession, base: String,
                        stage: String): Option[DataFrame] = {
-    val d = stageDir(base, stage)
-    if (!Files.isDirectory(d)) return None
-    val s = Files.list(d)
-    val dirs =
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("snapshot="))
-        .filter(p => Files.exists(p.resolve("manifest.json")))
-        .map(_.resolve("data").toString).toSeq
-      finally s.close()
+    val dirs = snapshots(base, stage)
+      .map(n => snapDir(base, stage, n).resolve("data").toString)
     if (dirs.isEmpty) None
     else Some(spark.read.parquet(dirs: _*))
   }
@@ -154,11 +152,9 @@ object GraphStore {
     // strings where parquet's dictionary attempt always falls back
     // after burning CPU per page (jstack-sampled as the dominant
     // write-path cost), and zstd already captures the redundancy
-    // dictionary encoding would. SPARK_GRAFT_PARQUET_DICT=1 restores
-    // the default for layouts where dictionaries do win.
+    // dictionary encoding would.
     val writer = df.write.mode("overwrite").option("compression", "zstd")
-      .option("parquet.enable.dictionary",
-        sys.env.get("SPARK_GRAFT_PARQUET_DICT").contains("1").toString)
+      .option("parquet.enable.dictionary", "false")
     (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*) else writer)
       .parquet(dataPath)
 
@@ -217,26 +213,16 @@ object GraphStore {
   /** All committed snapshot ids of a stage, ascending (the Iceberg
     * `snapshots` metadata-table surface). Manifest-less corpses are
     * invisible here exactly as they are to reads. */
-  def snapshots(base: String, stage: String): Seq[Long] = {
-    val d = stageDir(base, stage)
-    if (!Files.isDirectory(d)) return Nil
-    val s = Files.list(d)
-    try s.iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("snapshot="))
-      .filter(p => Files.exists(p.resolve("manifest.json")))
-      .map(_.getFileName.toString.stripPrefix("snapshot=").toLong)
-      .toSeq.sorted
-    finally s.close()
-  }
+  def snapshots(base: String, stage: String): Seq[Long] =
+    snapshotIds(base, stage).filter(isCommitted(base, stage, _)).sorted
 
   /** Time-travel read (Iceberg `VERSION AS OF`): the data of a SPECIFIC
     * committed snapshot, or None if that id was never committed (or was
     * expired). */
   def readSnapshot(spark: SparkSession, base: String, stage: String,
                    n: Long): Option[DataFrame] = {
-    val dir = snapDir(base, stage, n)
-    if (!Files.exists(dir.resolve("manifest.json"))) None
-    else Some(spark.read.parquet(dir.resolve("data").toString))
+    if (!isCommitted(base, stage, n)) None
+    else Some(spark.read.parquet(snapDir(base, stage, n).resolve("data").toString))
   }
 
   /** Close-safe recursive delete (shared by the snapshot expiry below
@@ -272,15 +258,8 @@ object GraphStore {
     if (committed.isEmpty) return Nil
     val keep = committed.takeRight(math.max(1, keepLast)).toSet
     val cutoff = keep.min
-    val d = stageDir(base, stage)
-    val s = Files.list(d)
-    val all =
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("snapshot="))
-        .map(_.getFileName.toString.stripPrefix("snapshot=").toLong)
-        .toSeq
-      finally s.close()
-    val doomed = all.filter(n => n < cutoff && !keep.contains(n)).sorted
+    val doomed = snapshotIds(base, stage)
+      .filter(n => n < cutoff && !keep.contains(n)).sorted
     doomed.foreach(n => deleteSnapshotDir(snapDir(base, stage, n)))
     doomed.filter(committed.contains)
   }
@@ -291,17 +270,10 @@ object GraphStore {
     * inputFp matches the rolled-back manifest resumes that data;
     * anything else recomputes forward from it. */
   def rollbackTo(base: String, stage: String, n: Long): Unit = {
-    require(Files.exists(snapDir(base, stage, n).resolve("manifest.json")),
+    require(isCommitted(base, stage, n),
       s"rollback target stage=$stage snapshot=$n is not committed")
-    val d = stageDir(base, stage)
-    val s = Files.list(d)
-    val newer =
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("snapshot="))
-        .map(_.getFileName.toString.stripPrefix("snapshot=").toLong)
-        .filter(_ > n).toSeq
-      finally s.close()
-    newer.foreach(m => deleteSnapshotDir(snapDir(base, stage, m)))
+    snapshotIds(base, stage).filter(_ > n)
+      .foreach(m => deleteSnapshotDir(snapDir(base, stage, m)))
   }
 
   def readLineage(spark: SparkSession, base: String, stage: String): Option[DataFrame] = {
@@ -321,10 +293,10 @@ object GraphStore {
                    partitionByCols: Seq[String] = Nil, inputFp: String = "",
                    lineageAsync: Boolean = false)
                   (f: => DataFrame): DataFrame = {
-    val fresh = committedFingerprint(base, stage).contains(inputFp)
-    if (fresh) readLatest(spark, base, stage).get
+    val committed = committedFingerprint(base, stage)
+    if (committed.contains(inputFp)) readLatest(spark, base, stage).get
     else {
-      if (committedFingerprint(base, stage).isDefined)
+      if (committed.isDefined)
         println(s"[store] stage=$stage input fingerprint changed — recomputing")
       val next = commit(spark, base, stage, f, partitionByCols, inputFp, lineageAsync)
       // Read the just-written snapshot by path: with lineageAsync the

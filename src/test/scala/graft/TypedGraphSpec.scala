@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.canon.Canonicalize
 import graft.fixtures.Corpus
 import graft.link.Linker
-import graft.schema.KgSchema
+import graft.schema.{Families, KgSchema}
 import graft.store.GraphStore
 import graft.triples.Triples
 
@@ -48,7 +48,7 @@ class TypedGraphSpec extends AnyFunSuite {
 
   test("fused edges carry multi-source props; ledger is a subset of web") {
     val web = Triples.extractEvidence(mentions, canon)
-    val ledger = Corpus.ledgerEdges(spark, TestSpark.sf0001, canon)
+    val ledger = Corpus.ledgerFrom(Corpus.lineFacts(spark, TestSpark.sf0001, Some(canon)))
     val fused = graft.merge.MergeSources.mergeAll(Seq(web, ledger),
       keys = Seq("subject_id", "relation_label", "object_id"),
       rules = Seq(
@@ -68,8 +68,7 @@ class TypedGraphSpec extends AnyFunSuite {
     val sup = Corpus.supplierNodes(spark, TestSpark.sf0001)
     val reg = Corpus.regionNodes(spark, TestSpark.sf0001)
     assert(KgSchema.nodeViolations(sup.unionByName(reg)).isEmpty)
-    val supplies = Corpus.supplyEdges(spark, TestSpark.sf0001,
-      Corpus.canonicalIds(spark, TestSpark.sf0001))
+    val supplies = Families.Standalone(spark, TestSpark.sf0001).edges("supplies")
     val inRegion = Corpus.inRegionEdges(spark, TestSpark.sf0001)
     assert(KgSchema.edgeViolations(
       supplies.select("subject_id", "relation_label", "object_id")
@@ -80,9 +79,8 @@ class TypedGraphSpec extends AnyFunSuite {
 
   test("schema-breadth layers conform: typed int/float/bool props and six new edge families") {
     val sf = TestSpark.sf0001
-    val shaped = Seq(
-      Corpus.orderNodes(spark, sf), Corpus.brandNodes(spark, sf),
-      Corpus.segmentNodes(spark, sf), Corpus.documentNodes(spark, sf))
+    val fam = Families.Standalone(spark, sf)
+    val shaped = Seq("order", "brand", "segment", "document").map(fam.nodes)
       .map(_.withColumn("props_arr", map().cast("map<string,array<string>>"))
         .withColumn("embedding", lit(null).cast("array<float>")))
       .reduce(_ unionByName _)
@@ -101,14 +99,8 @@ class TypedGraphSpec extends AnyFunSuite {
     val v = KgSchema.nodePropViolations(bad).select("id").as[String].collect().toSet
     assert(v == Set("ORDER:1", "ORDER:2", "DOC:1"))
     // six new edge families pass endpoint-prefix conformance
-    val canonT = Corpus.canonicalIds(spark, sf)
-    val edges = Seq(
-      Corpus.placedEdges(spark, sf),
-      Corpus.containsEdges(spark, sf, canonT),
-      Corpus.brandedAsEdges(spark, sf),
-      Corpus.inSegmentEdges(spark, sf),
-      Corpus.fromNationEdges(spark, sf),
-      Corpus.ratedEdges(spark, sf, canonT))
+    val edges = Seq("placed", "contains", "branded_as", "in_segment",
+        "from_nation", "rated").map(fam.edges)
       .map(_.select("subject_id", "relation_label", "object_id"))
       .reduce(_ unionByName _)
     assert(KgSchema.edgeViolations(edges).isEmpty)
@@ -116,21 +108,11 @@ class TypedGraphSpec extends AnyFunSuite {
 
   test("breadth block 3: all eight round-4 edge families pass endpoint-prefix conformance") {
     val sf = TestSpark.sf0001
-    val canonT = Corpus.canonicalIds(spark, sf)
-    val edges = Seq(
-      Corpus.sharesPartEdges(spark, sf, canonT),
-      Corpus.coPurchasedEdges(spark, sf),
-      Corpus.citesEdges(spark, sf),
-      Corpus.touchedEdges(spark, sf),
-      Corpus.peerOfEdges(spark, sf),
-      Corpus.nextOrderEdges(spark, sf),
-      Corpus.returnedEdges(spark, sf, canonT),
-      Corpus.shipsToEdges(spark, sf),
-      Corpus.similarToEdges(spark, sf),
-      Corpus.followedByEdges(spark, sf),
-      Corpus.locatedInRegionEdges(spark, sf),
-      Corpus.bestSupplierEdges(spark, sf, canonT),
-      Corpus.closestPartEdges(spark, sf))
+    val fam = Families.Standalone(spark, sf)
+    val edges = Seq("shares_part", "co_purchased_with", "cites", "touched",
+        "peer_of", "next_order", "returned", "ships_to", "similar_to",
+        "followed_by", "located_in_region", "best_supplied_by", "closest_to")
+      .map(fam.edges)
       .map(_.select("subject_id", "relation_label", "object_id"))
       .reduce(_ unionByName _)
     assert(KgSchema.edgeViolations(edges).isEmpty)
@@ -145,18 +127,11 @@ class TypedGraphSpec extends AnyFunSuite {
 
   test("breadth block 5: the ten parity edge families pass endpoint-prefix conformance") {
     val sf = TestSpark.sf0001
-    val canonT = Corpus.canonicalIds(spark, sf)
-    val edges = Seq(
-      Corpus.inFamilyEdges(spark, sf),
-      Corpus.variantOfEdges(spark, sf),
-      Corpus.bundleWithEdges(spark, sf, canonT),
-      Corpus.regulatesEdges(spark, sf),
-      Corpus.prefersEdges(spark, sf),
-      Corpus.boughtFromEdges(spark, sf),
-      Corpus.representativeOrderEdges(spark, sf),
-      Corpus.chargedWithEdges(spark, sf),
-      Corpus.dominantLangEdges(spark, sf),
-      Corpus.handlesEdges(spark, sf))
+    val fam = Families.Standalone(spark, sf)
+    val edges = Seq("in_family", "variant_of", "bundle_with", "regulates",
+        "prefers", "bought_from", "representative_order", "charged_with",
+        "dominant_lang", "handles")
+      .map(fam.edges)
       .map(_.select("subject_id", "relation_label", "object_id"))
       .reduce(_ unionByName _)
     assert(KgSchema.edgeViolations(edges).isEmpty)
@@ -169,14 +144,14 @@ class TypedGraphSpec extends AnyFunSuite {
     assert(KgSchema.edgeTypes.size == 40)
     // in_family objects resolve against the extended ptype vocabulary
     // (the fam_* nodes ride ptypeNodes)
-    val ptypes = Corpus.ptypeNodes(spark, sf).select(col("id"))
-    val dangling = Corpus.inFamilyEdges(spark, sf)
+    val ptypes = fam.nodes("ptype").select(col("id"))
+    val dangling = fam.edges("in_family")
       .join(ptypes, col("object_id") === col("id"), "left_anti")
     assert(dangling.isEmpty)
     // the handles evidence-set cap ENGAGES at fixture scale: no group
     // carries more than HandlesBrandCap brands, and at least one group
     // in the raw data exceeds the cap (so the bound is doing work)
-    val maxBrands = Corpus.handlesEdges(spark, sf)
+    val maxBrands = fam.edges("handles")
       .select(size(split(col("brands"), "\\|")).as("nb"))
       .agg(max(col("nb"))).as[Int].head()
     assert(maxBrands <= Corpus.HandlesBrandCap)

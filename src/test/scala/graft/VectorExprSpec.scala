@@ -72,7 +72,7 @@ class VectorExprSpec extends AnyFunSuite {
     val dim = emb.select(size(col("emb"))).head().getInt(0)
     val checks = (0 until 4).map { t =>
       (Knn.srpSignature(col("emb"), 6, t) =!=
-        Knn.srpSignatureUnrolled(col("emb"), dim, 6, t)).cast("int").as(s"t$t")
+        Knn.srpSignatureHof(col("emb"), dim, 6, t)).cast("int").as(s"t$t")
     }
     val bad = emb.select(checks: _*)
       .select(checks.indices.map(i => sum(col(s"t$i"))).reduce(_ + _).as("bad"))
@@ -99,20 +99,20 @@ class VectorExprSpec extends AnyFunSuite {
       .select(Knn.dot(col("e1"), col("e2")).as("nat"),
         Knn.dotHof(col("e1"), col("e2")).as("hof"))
       .filter(col("nat") =!= col("hof")).count() === 0L)
-    // SRP signature at 1024-d (native loop vs unrolled Column form)
+    // SRP signature at 1024-d (native loop vs the per-plane fold form)
     assert(wide
       .select(Knn.srpSignature(col("emb"), 6, 0).as("nat"),
-        Knn.srpSignatureUnrolled(col("emb"), 1024, 6, 0).as("hof"))
+        Knn.srpSignatureHof(col("emb"), 1024, 6, 0).as("hof"))
       .filter(col("nat") =!= col("hof")).count() === 0L)
     // CentroidDists at 1024-d vs an explicit sequential double fold
-    // (seed 0.0, term order d = 1..dim — the oracle-modeled order)
+    // (seed 0.0, term order d = 1..dim — the oracle-modeled order), as
+    // one shallow `aggregate`: a 1024-deep Column tree outgrows codegen
+    // and its interpreted fallback can overflow an executor's stack.
     val cents = graft.sim.Ivf.fixedCentroids(2, 1024)
     def distHof(e: org.apache.spark.sql.Column,
                 c: Array[Double]): org.apache.spark.sql.Column =
-      (0 until 1024).foldLeft(lit(0.0)) { (acc, d) =>
-        val diff = element_at(e, d + 1).cast("double") - lit(c(d))
-        acc + diff * diff
-      }
+      aggregate(zip_with(e, typedLit(c.toSeq), (x, cd) => x.cast("double") - cd),
+        lit(0.0), (acc, diff) => acc + diff * diff)
     assert(wide
       .select(VectorExprs.centroidDists(col("emb"), cents).as("nat"),
         array(distHof(col("emb"), cents(0)), distHof(col("emb"), cents(1))).as("hof"))
