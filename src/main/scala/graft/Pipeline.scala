@@ -145,10 +145,9 @@ object Pipeline {
       val fpEdges = s"edges-fused-v8;$fpMentions;$fpCanon;all-40-families-v1"
 
       // Stage-commit pipelining: independent stages run as concurrent
-      // Spark jobs (the scheduler interleaves their tasks), and each
-      // commit's lineage read-back + manifest land asynchronously off the
-      // critical path (GraphStore.awaitPending at the end; a kill leaves
-      // manifest-less corpses that resume recomputes — same guarantee).
+      // Spark jobs (the scheduler interleaves their tasks). Each commit
+      // is synchronous — data, lineage, then the manifest — so a kill
+      // leaves only manifest-less corpses that resume recomputes.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -157,7 +156,7 @@ object Pipeline {
       // only on the source tables — overlap it with extract+mentions.
       val canonF = Future {
         GraphStore.getOrCompute(spark, storeBase, "canonical_ids",
-          inputFp = fpCanon, lineageAsync = true) {
+          inputFp = fpCanon) {
           Corpus.canonicalIds(spark, sfDir)
         }
       }
@@ -222,7 +221,7 @@ object Pipeline {
       // stage, which semi-joins against the committed node ids.
       val nodesF = Future {
         GraphStore.getOrCompute(spark, storeBase, "nodes",
-            partitionByCols = Seq("bucket"), inputFp = fpNodes, lineageAsync = true) {
+            partitionByCols = Seq("bucket"), inputFp = fpNodes) {
           // Multi-adapter node merge (reference: one adapter per source —
           // uniprot/drug/go/... — all landing in one typed node table):
           // the COMPLETE relational entity universes + every registry node
@@ -239,9 +238,9 @@ object Pipeline {
           // One exchange on the bucket key before the partitioned write:
           // without it every upstream partition of the 12-family union
           // writes its own file per bucket directory (~270 files of
-          // ~16 KB at sf0.1), and the write + lineage read-back pay the
-          // per-file open/close three times. After: one task per occupied
-          // bucket, 32 right-sized files.
+          // ~16 KB at sf0.1), and every read of the snapshot pays the
+          // per-file open/close. After: one task per occupied bucket, 32
+          // right-sized files.
           Triples.nodesTyped(Corpus.relationalEntityNodes(spark, sfDir),
               Corpus.nodeAttrs(spark, sfDir))
             .unionByName(plain)
@@ -262,7 +261,7 @@ object Pipeline {
       // started and nothing here materializes. Job labels are thread-local,
       // so each family's jobs stay attributable.
       val edgesFresh =
-        GraphStore.committedFingerprint(storeBase, "edges").contains(fpEdges)
+        GraphStore.latestManifest(storeBase, "edges").map(_.inputFp).contains(fpEdges)
       def edgeFrame[A](f: Families.EdgeFamily[A]): Future[DataFrame] =
         source(f.input).map { in =>
           spark.sparkContext.setJobDescription(s"edges: ${f.label}")
@@ -281,7 +280,7 @@ object Pipeline {
       // place, 16× less shuffled bytes at mult=16) and per-page work stays
       // uniformly spread because replicas of a page are interchangeable.
       val extracted = GraphStore.getOrCompute(spark, storeBase, "extracted",
-          inputFp = fpExtract, lineageAsync = true) {
+          inputFp = fpExtract) {
         amplify(Corpus.pages(spark, sfDir)
             .repartition(partitions, xxhash64(col("url"))), mult)
           .select(
@@ -297,9 +296,8 @@ object Pipeline {
       // parquet — cheap relative to the stage it guards).
       val audit = extracted.filter(col("text_hash") =!= col("ref_hash")).count()
       require(audit == 0, s"byte-identity audit failed on $audit pages")
-      // Plain count over the committed snapshot (parquet row-group
-      // metadata — no data scan); decides the hub-salting threshold below.
-      val nPages = extracted.count()
+      // The committed row count; decides the hub-salting threshold below.
+      val nPages = GraphStore.latestManifest(storeBase, "extracted").get.rows
 
       // canonF has long resolved by now (it only needs the part table);
       // binding it here keeps the downstream code shape unchanged.
@@ -308,7 +306,7 @@ object Pipeline {
 
       // Stage 2: mentions (broadcast trie; fact side never shuffles).
       val mentions = GraphStore.getOrCompute(spark, storeBase, "mentions",
-          inputFp = fpMentions, lineageAsync = true) {
+          inputFp = fpMentions) {
         Linker.mentions(extracted.select("url", "text"), Corpus.aliasDict(spark, sfDir))
       }
       mark("mentions")
@@ -317,7 +315,7 @@ object Pipeline {
       // (scan + group of the big mentions table) ONCE, consumed by both
       // the triple and the evidence/edge stages.
       val pageSets = GraphStore.getOrCompute(spark, storeBase, "pagesets",
-          inputFp = s"pagesets-v1;$fpMentions;$fpCanon", lineageAsync = true) {
+          inputFp = s"pagesets-v1;$fpMentions;$fpCanon") {
         Triples.perPageEntitySets(mentions, canon)
       }
       // Hub-skew guard: past the page threshold, witness aggregation
@@ -331,7 +329,7 @@ object Pipeline {
       // so it runs concurrently with the nodes stage.
       val triplesF = Future {
         GraphStore.getOrCompute(spark, storeBase, "triples",
-          inputFp = fpTriples, lineageAsync = true) {
+          inputFp = fpTriples) {
           Triples.extractFromSets(pageSets, canon)
         }
       }
@@ -370,18 +368,18 @@ object Pipeline {
       // sources/evidence set-union, reference ppi_adapter.py:1268-1303),
       // then skip-bad-relationships at the sink (reference
       // biocypher_config skip_bad_relationships) = endpoints must exist.
-      val edges = GraphStore.getOrCompute(spark, storeBase, "edges",
-          partitionByCols = Seq("bucket"), inputFp = fpEdges, lineageAsync = true) {
+      GraphStore.getOrCompute(spark, storeBase, "edges",
+          partitionByCols = Seq("bucket"), inputFp = fpEdges) {
         dbgPlan("edges", KgSchema.dropBadRelationships(
             Await.result(edgesPlanF, Duration.Inf), nodes)
           .withColumn("bucket", pmod(xxhash64(col("subject_id")), lit(32)))
           // One exchange on the bucket key before the partitioned write:
           // the ~40-family union otherwise leaves ~170 writing tasks that
           // each open a file per bucket directory — 5,439 files averaging
-          // 7 KB at sf0.1, paid three times (write, lineage read-back,
-          // final count). After: one task per occupied bucket, 32
-          // right-sized files. Costs one shuffle of the final edge set
-          // (~40 MB zstd-equivalent), which the file-open savings repay.
+          // 7 KB at sf0.1, paid again by every read of the snapshot.
+          // After: one task per occupied bucket, 32 right-sized files.
+          // Costs one shuffle of the final edge set (~40 MB
+          // zstd-equivalent), which the file-open savings repay.
           .repartition(32, col("bucket")))
       }
       mark("edges")
@@ -393,16 +391,15 @@ object Pipeline {
       hotTables.foreach(_.unpersist(false))
 
       Await.result(triplesF, Duration.Inf)
-      val nTriples = edges.count()
-      val nNodes = nodes.count()
-      GraphStore.awaitPending()
+      val nTriples = GraphStore.latestManifest(storeBase, "edges").get.rows
+      val nNodes = GraphStore.latestManifest(storeBase, "nodes").get.rows
       // Retention sweep (Iceberg expire_snapshots): re-runs with changed
       // fingerprints accumulate superseded snapshots; keep the newest
       // `retainSnapshots` per stage (latest always survives — resume
       // semantics untouched) so the store's footprint stays bounded
-      // across the job's lifetime. Runs AFTER awaitPending: every
-      // in-flight commit has landed, so nothing newer-than-latest is a
-      // legitimate in-flight write.
+      // across the job's lifetime. Runs after every stage's commit has
+      // returned, so nothing newer-than-latest is a legitimate in-flight
+      // write.
       if (retainSnapshots > 0)
         Stages.foreach(GraphStore.expireSnapshots(storeBase, _, retainSnapshots))
       mark("finalize")

@@ -2,18 +2,30 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.format.Util
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
+import graft.model.LineageRow
 
 /** Snapshot/manifest graph store — the Iceberg-table emulation mandated
   * by SURVEY.md §7.0 (no Iceberg runtime jar in the sandbox): each stage
   * commits to `base/stage=<name>/snapshot=<n>/` with
   *   data/        partitioned parquet
-  *   lineage/     per-partition rows (partition_id, input_hash,
-  *                row_counts, stage_ms)
+  *   lineage/     one [[graft.model.LineageRow]] per write task
+  *                (partition_id = the task that wrote `part-<id>` files):
+  *                its row count, the bit_xor of its rows' xxhash64, and
+  *                the commit's wall-clock
   *   manifest.json  written LAST via atomic rename — its presence IS the
   *                commit; a killed job leaves no manifest and the next
   *                run resumes from the previous committed snapshot.
+  *
+  * A commit is one pass: the lineage is observed inside the data write
+  * job, checked against the committed files' parquet footers, and the
+  * lineage and manifest are written before the commit call returns.
   *
   * This replaces the reference's BioCypher/Neo4j CSV batch write path
   * (scripts/create_crossbar.py:112-114, biocypher_config.yaml:6-13 —
@@ -22,36 +34,6 @@ import org.apache.spark.sql.functions._
   * is atomic commit + lineage + resume.
   */
 object GraphStore {
-
-  /** In-flight asynchronous lineage/manifest jobs (stage-commit
-    * pipelining): the data files are written synchronously, the
-    * lineage read-back + manifest commit run concurrently with
-    * downstream stages. Await before treating the run as committed. */
-  private val pending =
-    new java.util.concurrent.ConcurrentLinkedQueue[scala.concurrent.Future[Long]]()
-
-  /** Block until every in-flight lineage/manifest job has committed
-    * (call at end-of-run; a kill before this leaves manifest-less
-    * corpses that resume safely recomputes). Every queued future is
-    * drained even when one fails — failures are aggregated into one
-    * exception instead of abandoning the rest of the queue un-awaited. */
-  def awaitPending(): Unit = {
-    import scala.concurrent.duration.Duration
-    val failures = scala.collection.mutable.ArrayBuffer.empty[Throwable]
-    var f = pending.poll()
-    while (f != null) {
-      try scala.concurrent.Await.result(f, Duration.Inf)
-      catch { case e: Throwable => failures += e }
-      f = pending.poll()
-    }
-    if (failures.nonEmpty) {
-      val head = failures.head
-      failures.tail.foreach(head.addSuppressed)
-      throw new RuntimeException(
-        s"${failures.size} async commit(s) failed; first cause attached, " +
-          "rest suppressed", head)
-    }
-  }
 
   private def stageDir(base: String, stage: String): Path =
     Paths.get(base, s"stage=$stage")
@@ -78,46 +60,43 @@ object GraphStore {
   def latestSnapshot(base: String, stage: String): Long =
     snapshots(base, stage).lastOption.getOrElse(-1L)
 
-  /** The input fingerprint recorded in a committed snapshot's manifest,
-    * or None for an uncommitted stage. Missing field (pre-fingerprint
+  /** What a committed snapshot's manifest records for its readers: the
+    * row count of its data and the caller's input fingerprint. */
+  final case class Manifest(rows: Long, inputFp: String)
+
+  /** The latest committed snapshot's manifest, or None for an
+    * uncommitted stage. A missing `input_fp` (pre-fingerprint
     * snapshots) reads as "". */
-  def committedFingerprint(base: String, stage: String): Option[String] = {
-    val n = latestSnapshot(base, stage)
-    if (n < 0) None
-    else {
-      val m = Files.readString(snapDir(base, stage, n).resolve("manifest.json"))
-      val pat = """"input_fp":"([^"]*)"""".r
-      Some(pat.findFirstMatchIn(m).map(_.group(1)).getOrElse(""))
+  def latestManifest(base: String, stage: String): Option[Manifest] =
+    snapshots(base, stage).lastOption.map { n =>
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(snapDir(base, stage, n).resolve("manifest.json").toFile)
+      Manifest(m.get("rows").asLong, m.path("input_fp").asText(""))
     }
-  }
 
   /** Write `df` as the next snapshot of `stage`. The lineage table gets
-    * one row per output partition: xxhash64-fold of the rows it holds,
-    * its row count, and the wall-clock of this commit. `inputFp` is the
+    * one row per write task: xxhash64-fold of the rows it wrote, its row
+    * count, and the wall-clock of this commit. `inputFp` is the
     * caller's fingerprint of everything the stage read (upstream
     * manifests + params); resume compares it before reusing a snapshot.
     * Returns the new snapshot id. */
   def commit(spark: SparkSession, base: String, stage: String, df: DataFrame,
-             partitionByCols: Seq[String] = Nil, inputFp: String = "",
-             lineageAsync: Boolean = false): Long = {
+             partitionByCols: Seq[String] = Nil, inputFp: String = ""): Long = {
     val next = latestSnapshot(base, stage) + 1
-    writeSnapshot(spark, base, stage, next, df, partitionByCols, inputFp,
-      lineageAsync)
+    writeSnapshot(spark, base, stage, next, df, partitionByCols, inputFp)
   }
 
   /** Idempotent MICRO-BATCH commit (the foreachBatch sink contract):
     * snapshot id IS the stream's batchId, so a failure-replayed batch
     * either finds its committed manifest and skips, or re-writes the
-    * never-committed corpse — a batch can never double-commit. Lineage
-    * and the atomic manifest rename are synchronous (a streaming batch
-    * is only "done" when its snapshot is durable). Returns true if this
-    * call committed, false if the batch was already committed. */
+    * never-committed corpse — a batch can never double-commit. Returns
+    * true if this call committed, false if the batch was already
+    * committed. */
   def commitBatch(spark: SparkSession, base: String, stage: String,
                   batchId: Long, df: DataFrame, inputFp: String = ""): Boolean = {
     if (isCommitted(base, stage, batchId)) false
     else {
-      writeSnapshot(spark, base, stage, batchId, df, Nil, inputFp,
-        lineageAsync = false)
+      writeSnapshot(spark, base, stage, batchId, df, Nil, inputFp)
       true
     }
   }
@@ -134,18 +113,73 @@ object GraphStore {
     else Some(spark.read.parquet(dirs: _*))
   }
 
+  /** Per-write-task (task, row count, bit_xor of row hashes), observed
+    * while the task writes: flat triples, one per task that saw a row.
+    * A task's buffer only ever holds its own rows; the driver merges
+    * each finished task's buffer once (a double merge would fail the
+    * footer check in `writeSnapshot`). The task id comes from the
+    * TaskContext — `spark_partition_id()` reads 0 inside an observed
+    * aggregate. */
+  private object PerTaskLineage extends Aggregator[Long, Array[Long], Array[Long]] {
+    def zero: Array[Long] = Array.emptyLongArray
+    def reduce(b: Array[Long], hash: Long): Array[Long] =
+      if (b.isEmpty) Array(TaskContext.getPartitionId().toLong, 1L, hash)
+      else { b(1) += 1; b(2) ^= hash; b }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = a ++ b
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  /** A parquet file's row count, from its footer alone: the file ends
+    * with the thrift FileMetaData, its 4-byte little-endian length and
+    * the magic "PAR1". On a 4-vCPU host with a local disk,
+    * parquet-hadoop's reader took ~10 ms a file; these two small reads
+    * take ~0.03 ms. */
+  private def footerRows(p: Path): Long = {
+    val f = new java.io.RandomAccessFile(p.toFile, "r")
+    try {
+      val tail = new Array[Byte](8)
+      f.seek(f.length - 8); f.readFully(tail)
+      val meta = new Array[Byte](java.nio.ByteBuffer.wrap(tail, 0, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt)
+      f.seek(f.length - 8 - meta.length); f.readFully(meta)
+      Util.readFileMetaData(new java.io.ByteArrayInputStream(meta)).getNum_rows
+    } finally f.close()
+  }
+
+  /** Row count of each write task's `part-<task>-…` files under `dir`,
+    * from their footers (metadata only, no data scan). Tasks that wrote
+    * no rows are left out. */
+  private def footerRowCounts(dir: Path): Map[Int, Long] = {
+    val PartFile = """part-(\d+)-.*\.parquet""".r
+    val s = Files.walk(dir)
+    try s.iterator().asScala.toList.map(p => (p, p.getFileName.toString))
+      .collect { case (p, PartFile(task)) => task.toInt -> footerRows(p) }
+      .groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
+    finally s.close()
+  }
+
   private def writeSnapshot(spark: SparkSession, base: String, stage: String,
                             next: Long, df: DataFrame,
-                            partitionByCols: Seq[String], inputFp: String,
-                            lineageAsync: Boolean): Long = {
+                            partitionByCols: Seq[String], inputFp: String): Long = {
     val dir = snapDir(base, stage, next)
     val t0 = System.nanoTime()
 
-    val dataPath = dir.resolve("data").toString
+    // Lineage hash: xxhash64 rejects MAP columns (undefined map
+    // ordering), and partition columns live in directory names, not in
+    // the files — hash the rest. Observed inside the write job itself:
+    // the write is the only pass over the rows.
+    val hashable = df.schema.fields
+      .filterNot(f => f.dataType.isInstanceOf[MapType] || partitionByCols.contains(f.name))
+      .map(f => col(f.name))
+    val rowHash = if (hashable.nonEmpty) xxhash64(hashable: _*) else lit(0L)
+    val obs = Observation()
+    val dataPath = dir.resolve("data")
     // zstd: stage snapshots are text-heavy (page text, urls, evidence);
-    // ~3x smaller files turn a memory/IO-bandwidth-bound write+readback
-    // (which does NOT scale with cores on one box) into CPU work (which
-    // does) — measured as the difference between flat and scaling
+    // ~3x smaller files turn a memory/IO-bandwidth-bound write (which
+    // does NOT scale with cores on one box) into CPU work (which does)
+    // — measured as the difference between flat and scaling
     // extract/mentions stages at high thread counts.
     // Dictionary encoding OFF for snapshot data: the heavy columns
     // (urls, evidence lists, property maps) are high-cardinality
@@ -153,62 +187,41 @@ object GraphStore {
     // after burning CPU per page (jstack-sampled as the dominant
     // write-path cost), and zstd already captures the redundancy
     // dictionary encoding would.
-    val writer = df.write.mode("overwrite").option("compression", "zstd")
+    val writer = df.observe(obs,
+        udaf(PerTaskLineage, Encoders.scalaLong)(rowHash).as("tasks"))
+      .write.mode("overwrite").option("compression", "zstd")
       .option("parquet.enable.dictionary", "false")
     (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*) else writer)
-      .parquet(dataPath)
+      .parquet(dataPath.toString)
 
-    // Lineage from the *committed* files (what a resume would read):
-    // spark_partition_id of the re-scan + order-insensitive hash fold.
-    // The manifest is only written AFTER lineage, so the snapshot stays
-    // invisible (a recomputable corpse) if anything dies in between —
-    // which is what makes lineageAsync safe: it only moves this
-    // read-back off the critical path, never the commit guarantee.
-    def finishCommit(): Long = {
-      val written = spark.read.parquet(dataPath)
-      // xxhash64 rejects MAP columns (undefined map ordering); hash the rest
-      val hashable = written.schema.fields
-        .filterNot(_.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
-        .map(f => col(f.name))
-      val rowHash = if (hashable.nonEmpty) xxhash64(hashable: _*) else lit(0L)
-      val elapsedMs = (System.nanoTime() - t0) / 1000000
-      // ONE read-back pass: the lineage aggregation also yields the total
-      // row count for the manifest (stage commits were IO-bound with a
-      // separate count() pass — measured as the pipeline's Amdahl floor).
-      val lineage = written
-        .groupBy(spark_partition_id().as("partition_id"))
-        .agg(bit_xor(rowHash).as("input_hash"), count(lit(1)).as("row_counts"))
-        .withColumn("stage", lit(stage))
-        .withColumn("snapshot", lit(next))
-        .withColumn("stage_ms", lit(elapsedMs))
-        .select("stage", "snapshot", "partition_id", "input_hash", "row_counts", "stage_ms")
-        .localCheckpoint(true)
-      val totalRows = lineage.agg(sum(col("row_counts"))).head().getLong(0)
-      lineage.coalesce(1).write.mode("overwrite").parquet(dir.resolve("lineage").toString)
+    val elapsedMs = (System.nanoTime() - t0) / 1000000
+    val lineage = obs.get("tasks").asInstanceOf[collection.Seq[Long]].grouped(3)
+      .map(t => LineageRow(stage, next, t(0).toInt, t(2), t(1), elapsedMs))
+      .toSeq.sortBy(_.partition_id)
+    // The observed per-task counts must be what the committed files
+    // hold; a mismatch throws before the manifest, leaving a
+    // recomputable corpse.
+    val inFiles = footerRowCounts(dataPath)
+    if (lineage.map(r => r.partition_id -> r.row_counts) != inFiles.toSeq.sorted)
+      throw new IllegalStateException(s"stage=$stage snapshot=$next: observed " +
+        s"per-task rows $lineage != parquet footer rows $inFiles")
+    spark.createDataset(lineage)(Encoders.product[LineageRow])
+      .coalesce(1).write.mode("overwrite").parquet(dir.resolve("lineage").toString)
 
-      // Atomic commit: manifest written to a temp name, then renamed.
-      val manifest =
-        s"""{"stage":"$stage","snapshot":$next,"rows":$totalRows,""" +
-          s""""committed_ms":$elapsedMs,"input_fp":"$inputFp"}"""
-      val tmp = dir.resolve(".manifest.tmp")
-      Files.writeString(tmp, manifest)
-      Files.move(tmp, dir.resolve("manifest.json"), StandardCopyOption.ATOMIC_MOVE)
-      next
-    }
-    if (lineageAsync) {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      pending.add(scala.concurrent.Future(finishCommit()))
-      next
-    } else finishCommit()
+    // Atomic commit: manifest written to a temp name, then renamed.
+    val manifest =
+      s"""{"stage":"$stage","snapshot":$next,"rows":${inFiles.values.sum},""" +
+        s""""committed_ms":$elapsedMs,"input_fp":"$inputFp"}"""
+    val tmp = dir.resolve(".manifest.tmp")
+    Files.writeString(tmp, manifest)
+    Files.move(tmp, dir.resolve("manifest.json"), StandardCopyOption.ATOMIC_MOVE)
+    next
   }
 
   /** Read the latest committed snapshot of `stage`; None if never
     * committed (resume entry point). */
-  def readLatest(spark: SparkSession, base: String, stage: String): Option[DataFrame] = {
-    val n = latestSnapshot(base, stage)
-    if (n < 0) None
-    else Some(spark.read.parquet(snapDir(base, stage, n).resolve("data").toString))
-  }
+  def readLatest(spark: SparkSession, base: String, stage: String): Option[DataFrame] =
+    readSnapshot(spark, base, stage, latestSnapshot(base, stage))
 
   /** All committed snapshot ids of a stage, ascending (the Iceberg
     * `snapshots` metadata-table surface). Manifest-less corpses are
@@ -220,10 +233,15 @@ object GraphStore {
     * committed snapshot, or None if that id was never committed (or was
     * expired). */
   def readSnapshot(spark: SparkSession, base: String, stage: String,
-                   n: Long): Option[DataFrame] = {
+                   n: Long): Option[DataFrame] =
+    readCommitted(spark, base, stage, n, "data")
+
+  /** One table (`data` or `lineage`) of a committed snapshot; None if
+    * snapshot `n` is not committed. */
+  private def readCommitted(spark: SparkSession, base: String, stage: String,
+                            n: Long, table: String): Option[DataFrame] =
     if (!isCommitted(base, stage, n)) None
-    else Some(spark.read.parquet(snapDir(base, stage, n).resolve("data").toString))
-  }
+    else Some(spark.read.parquet(snapDir(base, stage, n).resolve(table).toString))
 
   /** Close-safe recursive delete (shared by the snapshot expiry below
     * and the tmp-store cleanup in Bench / the stream queries). */
@@ -276,32 +294,25 @@ object GraphStore {
       .foreach(m => deleteSnapshotDir(snapDir(base, stage, m)))
   }
 
-  def readLineage(spark: SparkSession, base: String, stage: String): Option[DataFrame] = {
-    val n = latestSnapshot(base, stage)
-    if (n < 0) None
-    else Some(spark.read.parquet(snapDir(base, stage, n).resolve("lineage").toString))
-  }
+  def readLineage(spark: SparkSession, base: String, stage: String): Option[DataFrame] =
+    readCommitted(spark, base, stage, latestSnapshot(base, stage), "lineage")
 
   /** Compute-or-resume: if `stage` has a committed snapshot whose
     * recorded input fingerprint matches `inputFp`, read it; otherwise
     * compute `f`, commit (optionally directory-partitioned for
-    * downstream pruning), and read back the committed data. A changed
+    * downstream pruning), and read the committed snapshot. A changed
     * corpus/params therefore invalidates stale snapshots instead of
     * silently resuming wrong data. This is the per-stage checkpoint the
     * north rule requires. */
   def getOrCompute(spark: SparkSession, base: String, stage: String,
-                   partitionByCols: Seq[String] = Nil, inputFp: String = "",
-                   lineageAsync: Boolean = false)
+                   partitionByCols: Seq[String] = Nil, inputFp: String = "")
                   (f: => DataFrame): DataFrame = {
-    val committed = committedFingerprint(base, stage)
-    if (committed.contains(inputFp)) readLatest(spark, base, stage).get
-    else {
+    val committed = latestManifest(base, stage).map(_.inputFp)
+    if (!committed.contains(inputFp)) {
       if (committed.isDefined)
         println(s"[store] stage=$stage input fingerprint changed — recomputing")
-      val next = commit(spark, base, stage, f, partitionByCols, inputFp, lineageAsync)
-      // Read the just-written snapshot by path: with lineageAsync the
-      // manifest may not have landed yet, but the data files have.
-      spark.read.parquet(snapDir(base, stage, next).resolve("data").toString)
+      commit(spark, base, stage, f, partitionByCols, inputFp)
     }
+    readLatest(spark, base, stage).get
   }
 }

@@ -109,6 +109,74 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(computes == 1)
   }
 
+  test("store: lineage observed in the write equals a re-scan of the committed files") {
+    // Six input partitions, a map column (not hashable) and a bucket
+    // column, committed once flat and once directory-partitioned.
+    val df = spark.range(0, 3000, 1, 6).select(
+      $"id", concat(lit("v"), $"id").as("v"),
+      map(lit("k"), $"id".cast("string")).as("m"),
+      pmod(xxhash64($"id"), lit(5)).as("bucket"))
+    for ((stage, partitionBy) <- Seq("flat" -> Nil, "bucketed" -> Seq("bucket"))) {
+      val base = Files.createTempDirectory("gs_lin_").toString
+      GraphStore.commit(spark, base, stage, df, partitionByCols = partitionBy)
+      val lin = GraphStore.readLineage(spark, base, stage).get
+      assert(lin.columns.toSeq ==
+        Seq("stage", "snapshot", "partition_id", "input_hash", "row_counts", "stage_ms"))
+      assert(lin.count() > 1, s"$stage: expected one lineage row per write task")
+      val dataDir = Paths.get(base, s"stage=$stage", "snapshot=0", "data").toString
+      val rescan = spark.read.parquet(dataDir)
+      val n = rescan.count()
+      assert(n == 3000L)
+      assert(lin.agg(sum("row_counts")).head().getLong(0) == n, stage)
+      assert(GraphStore.latestManifest(base, stage).get.rows == n, stage)
+      // partition_id names the write task: its row count is what its
+      // part-<id> files hold
+      val perTaskFile = rescan
+        .select(regexp_extract(input_file_name(), "part-(\\d+)-", 1).cast("int").as("t"))
+        .groupBy("t").count().as[(Int, Long)].collect().toMap
+      val perTaskLineage = lin.select("partition_id", "row_counts")
+        .as[(Int, Long)].collect().toMap
+      assert(perTaskLineage == perTaskFile, stage)
+      val hashCols = Seq("id", "v") ++ (if (partitionBy.isEmpty) Seq("bucket") else Nil)
+      val rescanXor = rescan.agg(bit_xor(xxhash64(hashCols.map(col): _*))).head().getLong(0)
+      assert(lin.agg(bit_xor(col("input_hash"))).head().getLong(0) == rescanXor, stage)
+    }
+  }
+
+  test("store: an empty frame commits with rows = 0 and an empty, readable lineage") {
+    val base = Files.createTempDirectory("gs_empty_").toString
+    val empties = Seq(
+      "local" -> Seq.empty[(Long, String)].toDF("id", "v"),
+      "filtered" -> spark.range(0, 100, 1, 4).filter($"id" < 0)
+        .select($"id", $"id".cast("string").as("v")))
+    for ((stage, df) <- empties) {
+      assert(GraphStore.commit(spark, base, stage, df) == 0)
+      assert(GraphStore.latestManifest(base, stage).get.rows == 0L, stage)
+      assert(GraphStore.readLatest(spark, base, stage).get.count() == 0L, stage)
+      val lin = GraphStore.readLineage(spark, base, stage).get
+      assert(lin.columns.contains("row_counts") && lin.count() == 0L, stage)
+    }
+  }
+
+  test("store: a write that throws mid-job surfaces, commits nothing, and the stage recommits") {
+    val base = Files.createTempDirectory("gs_fail_").toString
+    GraphStore.commit(spark, base, "t", Seq((1L, "a")).toDF("id", "v"))
+    val poisoned = spark.range(0, 400, 1, 4).select($"id",
+      when($"id" === 257, raise_error(lit("poisoned row")))
+        .otherwise($"id".cast("string")).as("v"))
+    val e = intercept[Exception](GraphStore.commit(spark, base, "t", poisoned))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("poisoned row")))
+    assert(!Files.exists(Paths.get(base, "stage=t", "snapshot=1", "manifest.json")))
+    assert(GraphStore.latestSnapshot(base, "t") == 0L)
+    assert(GraphStore.latestManifest(base, "t").get.rows == 1L)
+    assert(GraphStore.commit(spark, base, "t", Seq((2L, "b")).toDF("id", "v")) == 1L)
+    assert(GraphStore.readLatest(spark, base, "t").get
+      .as[(Long, String)].collect().toSeq == Seq((2L, "b")))
+    assert(GraphStore.readLineage(spark, base, "t").get
+      .agg(sum("row_counts")).head().getLong(0) == 1L)
+  }
+
   test("pipeline: end-to-end matches q_triples/q_nodes; resume run is identical") {
     val base = Files.createTempDirectory("pipe_").toString
     val r1 = Pipeline.run(spark, TestSpark.sf0001, base, partitions = 8)
