@@ -32,6 +32,9 @@ object Pipeline {
       name: String, wallS: Double, taskRunS: Double, taskCpuS: Double,
       shufWMb: Double, scanMb: Double, rows: Long)
 
+  /** `auditMismatches` is 0 by construction: a page whose extraction
+    * misses its reference text fails the extract write itself, so a run
+    * that returns a Result has none. */
   final case class Result(
       nPages: Long, nTriples: Long, nNodes: Long,
       auditMismatches: Long, seconds: Double, triplesPerSec: Double,
@@ -132,7 +135,7 @@ object Pipeline {
       // invalidates downstream committed snapshots on resume (the manifest
       // records the fp; GraphStore recomputes on mismatch).
       val fpCorpus = s"corpus;sfDir=$sfDir;mult=$mult"
-      val fpExtract = s"extract-v2;$fpCorpus"
+      val fpExtract = s"extract-v3;$fpCorpus"
       val fpMentions = s"mentions-trie-v2;$fpExtract;dict=aliasDict"
       val fpCanon = s"canon-cc-v1;sfDir=$sfDir"
       val fpTriples = s"triples-v1;$fpMentions;$fpCanon"
@@ -146,8 +149,9 @@ object Pipeline {
 
       // Stage-commit pipelining: independent stages run as concurrent
       // Spark jobs (the scheduler interleaves their tasks). Each commit
-      // is synchronous — data, lineage, then the manifest — so a kill
-      // leaves only manifest-less corpses that resume recomputes.
+      // is synchronous — the data write, then the manifest carrying its
+      // lineage — so a kill leaves only manifest-less corpses that resume
+      // recomputes.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -279,6 +283,9 @@ object Pipeline {
       // shuffle moves only the base corpus (replicas explode map-side in
       // place, 16× less shuffled bytes at mult=16) and per-page work stays
       // uniformly spread because replicas of a page are interchangeable.
+      // The audit runs inside the write: a page whose extraction misses
+      // its reference hash raises, failing the write before the manifest,
+      // so a corrupt extraction is never committed, let alone resumed.
       val extracted = GraphStore.getOrCompute(spark, storeBase, "extracted",
           inputFp = fpExtract) {
         amplify(Corpus.pages(spark, sfDir)
@@ -287,15 +294,11 @@ object Pipeline {
             col("url"), col("warc_ts"), col("lang"),
             HtmlText.htmlText(col("html")).as("text"),
             xxhash64(col("text")).as("ref_hash"))
-          .withColumn("text_hash", xxhash64(col("text")))
+          .withColumn("text_hash",
+            when(xxhash64(col("text")) === col("ref_hash"), xxhash64(col("text")))
+              .otherwise(raise_error(concat(lit("byte-identity audit failed on "), col("url")))))
       }
       mark("extract")
-      // Audit gates the mentions stage: a corrupt extraction must fail
-      // BEFORE a downstream snapshot derived from it can be committed and
-      // resumed (the audit is a two-int64-column scan of the committed
-      // parquet — cheap relative to the stage it guards).
-      val audit = extracted.filter(col("text_hash") =!= col("ref_hash")).count()
-      require(audit == 0, s"byte-identity audit failed on $audit pages")
       // The committed row count; decides the hub-salting threshold below.
       val nPages = GraphStore.latestManifest(storeBase, "extracted").get.rows
 
@@ -404,7 +407,7 @@ object Pipeline {
         Stages.foreach(GraphStore.expireSnapshots(storeBase, _, retainSnapshots))
       mark("finalize")
       val secs = (System.nanoTime() - t0) / 1e9
-      Result(nPages, nTriples, nNodes, audit, secs, nTriples / secs, nPages / secs,
+      Result(nPages, nTriples, nNodes, 0L, secs, nTriples / secs, nPages / secs,
         marks.toSeq)
     } catch {
       case e: Throwable =>

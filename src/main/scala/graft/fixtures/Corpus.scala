@@ -169,6 +169,28 @@ object Corpus {
       concat(col("p_name"), lit(" "), col("p_brand"), lit(" "), col("p_type"),
         lit(" size "), col("p_size")).as("ptext"))
 
+  /** The canonical products, one row per part name: `minkey` is the
+    * lexicographic min of 'PARTRAW:<k>' over the name group (the CC
+    * vertex-id ordering), NOT the numeric min, joined back to `part`
+    * once for that part's p_brand / p_type / p_size; `sizes` holds the
+    * group's distinct sizes and `family` the name-derived family key.
+    * Every builder over canonical products is a projection of this one
+    * frame. A single-word p_name has no family noun (element_at yields
+    * null): the family builders drop those rows, so a malformed name can
+    * never inject a null-id TYPE:fam_ node or in_family/variant_of edge
+    * into the store (the fixture invariant is two-word names; the guard
+    * makes it a structural property instead of a data assumption). */
+  private def canonicalParts(spark: SparkSession, sfDir: String): DataFrame = {
+    val part = table(spark, sfDir, "part")
+    val groups = part.groupBy(col("p_name")).agg(
+      regexp_replace(min(concat(lit("PARTRAW:"), col("p_partkey"))), "^PARTRAW:", "")
+        .cast("long").as("minkey"),
+      array_sort(collect_set(col("p_size").cast("string"))).as("sizes"))
+    groups.join(part, groups("minkey") === part("p_partkey")).select(
+      col("minkey"), groups("p_name"), col("p_brand"), col("p_type"), col("p_size"),
+      col("sizes"), nameFamily(groups("p_name")).as("family"))
+  }
+
   /** Per-label node attribute projections for the typed-node emission
     * (Triples.nodesTyped): canonical product ids (lex-min PARTRAW key of
     * the name group — matching the CC component choice) carry the
@@ -176,20 +198,10 @@ object Corpus {
     * multi-value prop, and the 64-dim embedding row keyed by the
     * canonical partkey; customers carry mktsegment, nations regionkey. */
   def nodeAttrs(spark: SparkSession, sfDir: String): DataFrame = {
-    val part = table(spark, sfDir, "part")
-    // Canonical key = lexicographic min of 'PARTRAW:<k>' per name group
-    // (the CC vertex-id ordering), NOT the numeric min.
-    val groups = part
-      .groupBy(col("p_name"))
-      .agg(
-        regexp_replace(min(concat(lit("PARTRAW:"), col("p_partkey"))), "^PARTRAW:", "")
-          .cast("long").as("minkey"),
-        array_sort(collect_set(col("p_size").cast("string"))).as("sizes"))
     val emb = table(spark, sfDir, "embeddings").select(
       col("vec_id"), col("embedding"))
-    val prod = groups
-      .join(part, groups("minkey") === part("p_partkey"))
-      .join(emb, groups("minkey") === emb("vec_id"), "left")
+    val prod = canonicalParts(spark, sfDir)
+      .join(emb, col("minkey") === emb("vec_id"), "left")
       .select(
         concat(lit("PART:"), col("minkey")).as("id"),
         map(
@@ -436,16 +448,11 @@ object Corpus {
 
   /** (PART-canonical, branded_as, BRAND) edges — the canonical part's
     * brand, same canonical-key choice as nodeAttrs (lex-min PARTRAW). */
-  def brandedAsEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    val part = table(spark, sfDir, "part")
-    val groups = part.groupBy(col("p_name")).agg(
-      regexp_replace(min(concat(lit("PARTRAW:"), col("p_partkey"))), "^PARTRAW:", "")
-        .cast("long").as("minkey"))
-    groups.join(part, groups("minkey") === part("p_partkey")).select(
+  def brandedAsEdges(spark: SparkSession, sfDir: String): DataFrame =
+    canonicalParts(spark, sfDir).select(
       concat(lit("PART:"), col("minkey")).as("subject_id"),
       lit("branded_as").as("relation_label"),
       concat(lit("BRAND:"), regexp_replace(col("p_brand"), " ", "_")).as("object_id"))
-  }
 
   /** (CUST, in_segment, SEG) edges. */
   def inSegmentEdges(spark: SparkSession, sfDir: String): DataFrame =
@@ -594,16 +601,11 @@ object Corpus {
 
   /** (PART-canonical, of_type, TYPE) edges — the canonical part's type,
     * same canonical-key choice as brandedAsEdges. */
-  def ofTypeEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    val part = table(spark, sfDir, "part")
-    val groups = part.groupBy(col("p_name")).agg(
-      regexp_replace(min(concat(lit("PARTRAW:"), col("p_partkey"))), "^PARTRAW:", "")
-        .cast("long").as("minkey"))
-    groups.join(part, groups("minkey") === part("p_partkey")).select(
+  def ofTypeEdges(spark: SparkSession, sfDir: String): DataFrame =
+    canonicalParts(spark, sfDir).select(
       concat(lit("PART:"), col("minkey")).as("subject_id"),
       lit("of_type").as("relation_label"),
       concat(lit("TYPE:"), regexp_replace(col("p_type"), " ", "_")).as("object_id"))
-  }
 
   /** (USER, performed, EVT) edges aggregated per (user, event type):
     * int event count + int micro-unit value sum, over a shared
@@ -895,11 +897,8 @@ object Corpus {
     * baseline is fine here because the vector set is one-per-node —
     * the LSH/IVF scale paths exist alongside in `sim/`). */
   def closestPartEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    val mk = table(spark, sfDir, "part").groupBy(col("p_name")).agg(
-      regexp_replace(min(concat(lit("PARTRAW:"), col("p_partkey"))), "^PARTRAW:", "")
-        .cast("long").as("minkey"))
     val corpus = table(spark, sfDir, "embeddings")
-      .join(mk, col("vec_id") === col("minkey"))
+      .join(canonicalParts(spark, sfDir), col("vec_id") === col("minkey"))
       .select(col("vec_id").as("id"), col("embedding").as("emb"))
     graft.sim.Knn.bruteForceTopK(corpus, corpus, k = 1)
       .select(
@@ -931,27 +930,13 @@ object Corpus {
   private def nameFamily(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     element_at(split(c, " "), 2)
 
-  /** Canonical products with their name-derived family:
-    * (minkey, family). One row per canonical part. A single-word
-    * p_name has no family noun (element_at yields null) — those rows
-    * are dropped here so a malformed name can never inject a null-id
-    * TYPE:fam_ node or in_family/variant_of edge into the store (the
-    * fixture invariant is two-word names; the guard makes it a
-    * structural property instead of a data assumption). */
-  private def canonicalFamilies(spark: SparkSession, sfDir: String): DataFrame =
-    table(spark, sfDir, "part").groupBy(col("p_name")).agg(
-        regexp_replace(min(concat(lit("PARTRAW:"), col("p_partkey"))), "^PARTRAW:", "")
-          .cast("long").as("minkey"))
-      .select(col("minkey"), nameFamily(col("p_name")).as("family"))
-      .filter(col("family").isNotNull)
-
   /** (PART-canonical, in_family, TYPE:fam_*) — content-derived
     * vocabulary membership: each canonical product belongs to the
     * family named by its name's noun (protein -> protein-domain
     * membership, schema_config.yaml:238-247; the family vocabulary
     * nodes ride ptypeNodes). */
   def inFamilyEdges(spark: SparkSession, sfDir: String): DataFrame =
-    canonicalFamilies(spark, sfDir).select(
+    canonicalParts(spark, sfDir).filter(col("family").isNotNull).select(
       concat(lit("PART:"), col("minkey")).as("subject_id"),
       lit("in_family").as("relation_label"),
       concat(lit("TYPE:fam_"), col("family")).as("object_id"))
@@ -964,7 +949,7 @@ object Corpus {
   def variantOfEdges(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("family")).orderBy(col("minkey"))
-    canonicalFamilies(spark, sfDir)
+    canonicalParts(spark, sfDir).filter(col("family").isNotNull)
       .withColumn("prev", lag(col("minkey"), 1).over(w))
       .filter(col("prev").isNotNull)
       .select(
@@ -1197,14 +1182,10 @@ object Corpus {
     * Mention-derived nodes are a value-identical subset (a component's
     * aliases all equal its p_name). */
   def relationalEntityNodes(spark: SparkSession, sfDir: String): DataFrame = {
-    val part = table(spark, sfDir, "part")
-    val prod = part.groupBy(col("p_name")).agg(
-        regexp_replace(min(concat(lit("PARTRAW:"), col("p_partkey"))), "^PARTRAW:", "")
-          .as("minkey"))
-      .select(
-        concat(lit("PART:"), col("minkey")).as("id"),
-        lit("product").as("label"),
-        map(lit("name"), col("p_name")).as("props"))
+    val prod = canonicalParts(spark, sfDir).select(
+      concat(lit("PART:"), col("minkey")).as("id"),
+      lit("product").as("label"),
+      map(lit("name"), col("p_name")).as("props"))
     val cust = table(spark, sfDir, "customer").select(
       concat(lit("CUST:"), col("c_custkey")).as("id"),
       lit("customer").as("label"),

@@ -2,6 +2,8 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.parquet.format.Util
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSession}
@@ -15,17 +17,19 @@ import graft.model.LineageRow
   * by SURVEY.md §7.0 (no Iceberg runtime jar in the sandbox): each stage
   * commits to `base/stage=<name>/snapshot=<n>/` with
   *   data/        partitioned parquet
-  *   lineage/     one [[graft.model.LineageRow]] per write task
-  *                (partition_id = the task that wrote `part-<id>` files):
-  *                its row count, the bit_xor of its rows' xxhash64, and
-  *                the commit's wall-clock
-  *   manifest.json  written LAST via atomic rename — its presence IS the
-  *                commit; a killed job leaves no manifest and the next
-  *                run resumes from the previous committed snapshot.
+  *   manifest.json  row count, input fingerprint, commit wall-clock and
+  *                the `lineage` array: one [[graft.model.LineageRow]]
+  *                per write task (partition_id = the task that wrote
+  *                `part-<id>` files) with its row count and the bit_xor
+  *                of its rows' xxhash64. Written LAST via atomic rename —
+  *                its presence IS the commit; a killed job leaves no
+  *                manifest and the next run resumes from the previous
+  *                committed snapshot.
   *
-  * A commit is one pass: the lineage is observed inside the data write
-  * job, checked against the committed files' parquet footers, and the
-  * lineage and manifest are written before the commit call returns.
+  * A commit is one Spark job plus one file: the lineage is observed
+  * inside the data write job, checked against the committed files'
+  * parquet footers, and carried in the manifest (as Iceberg keeps
+  * per-file statistics in its commit metadata, not in a second table).
   *
   * This replaces the reference's BioCypher/Neo4j CSV batch write path
   * (scripts/create_crossbar.py:112-114, biocypher_config.yaml:6-13 —
@@ -61,29 +65,35 @@ object GraphStore {
     snapshots(base, stage).lastOption.getOrElse(-1L)
 
   /** What a committed snapshot's manifest records for its readers: the
-    * row count of its data and the caller's input fingerprint. */
-  final case class Manifest(rows: Long, inputFp: String)
+    * row count of its data, the caller's input fingerprint and the
+    * per-write-task lineage. */
+  final case class Manifest(rows: Long, inputFp: String,
+                            lineage: Option[Seq[LineageRow]] = None)
+
+  /** Writes and reads every manifest, so any `input_fp` string
+    * round-trips escaped. */
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
   /** The latest committed snapshot's manifest, or None for an
     * uncommitted stage. A missing `input_fp` (pre-fingerprint
-    * snapshots) reads as "". */
+    * snapshots) reads as "", a missing `lineage` as None. */
   def latestManifest(base: String, stage: String): Option[Manifest] =
     snapshots(base, stage).lastOption.map { n =>
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(snapDir(base, stage, n).resolve("manifest.json").toFile)
-      Manifest(m.get("rows").asLong, m.path("input_fp").asText(""))
+      val m = json.readTree(snapDir(base, stage, n).resolve("manifest.json").toFile)
+      Manifest(m.get("rows").asLong, m.path("input_fp").asText(""),
+        Option(m.get("lineage")).map(json.treeToValue(_, classOf[Array[LineageRow]]).toSeq))
     }
 
-  /** Write `df` as the next snapshot of `stage`. The lineage table gets
-    * one row per write task: xxhash64-fold of the rows it wrote, its row
-    * count, and the wall-clock of this commit. `inputFp` is the
+  /** Write `df` as the next snapshot of `stage`. The manifest's lineage
+    * gets one row per write task: xxhash64-fold of the rows it wrote,
+    * its row count, and the wall-clock of this commit. `inputFp` is the
     * caller's fingerprint of everything the stage read (upstream
     * manifests + params); resume compares it before reusing a snapshot.
     * Returns the new snapshot id. */
   def commit(spark: SparkSession, base: String, stage: String, df: DataFrame,
              partitionByCols: Seq[String] = Nil, inputFp: String = ""): Long = {
     val next = latestSnapshot(base, stage) + 1
-    writeSnapshot(spark, base, stage, next, df, partitionByCols, inputFp)
+    writeSnapshot(base, stage, next, df, partitionByCols, inputFp)
   }
 
   /** Idempotent MICRO-BATCH commit (the foreachBatch sink contract):
@@ -96,7 +106,7 @@ object GraphStore {
                   batchId: Long, df: DataFrame, inputFp: String = ""): Boolean = {
     if (isCommitted(base, stage, batchId)) false
     else {
-      writeSnapshot(spark, base, stage, batchId, df, Nil, inputFp)
+      writeSnapshot(base, stage, batchId, df, Nil, inputFp)
       true
     }
   }
@@ -160,8 +170,7 @@ object GraphStore {
     finally s.close()
   }
 
-  private def writeSnapshot(spark: SparkSession, base: String, stage: String,
-                            next: Long, df: DataFrame,
+  private def writeSnapshot(base: String, stage: String, next: Long, df: DataFrame,
                             partitionByCols: Seq[String], inputFp: String): Long = {
     val dir = snapDir(base, stage, next)
     val t0 = System.nanoTime()
@@ -205,15 +214,14 @@ object GraphStore {
     if (lineage.map(r => r.partition_id -> r.row_counts) != inFiles.toSeq.sorted)
       throw new IllegalStateException(s"stage=$stage snapshot=$next: observed " +
         s"per-task rows $lineage != parquet footer rows $inFiles")
-    spark.createDataset(lineage)(Encoders.product[LineageRow])
-      .coalesce(1).write.mode("overwrite").parquet(dir.resolve("lineage").toString)
 
     // Atomic commit: manifest written to a temp name, then renamed.
-    val manifest =
-      s"""{"stage":"$stage","snapshot":$next,"rows":${inFiles.values.sum},""" +
-        s""""committed_ms":$elapsedMs,"input_fp":"$inputFp"}"""
+    val manifest = json.createObjectNode().put("stage", stage).put("snapshot", next)
+      .put("rows", inFiles.values.sum).put("committed_ms", elapsedMs)
+      .put("input_fp", inputFp)
+      .set[JsonNode]("lineage", json.valueToTree[JsonNode](lineage))
     val tmp = dir.resolve(".manifest.tmp")
-    Files.writeString(tmp, manifest)
+    Files.writeString(tmp, json.writeValueAsString(manifest))
     Files.move(tmp, dir.resolve("manifest.json"), StandardCopyOption.ATOMIC_MOVE)
     next
   }
@@ -234,14 +242,8 @@ object GraphStore {
     * expired). */
   def readSnapshot(spark: SparkSession, base: String, stage: String,
                    n: Long): Option[DataFrame] =
-    readCommitted(spark, base, stage, n, "data")
-
-  /** One table (`data` or `lineage`) of a committed snapshot; None if
-    * snapshot `n` is not committed. */
-  private def readCommitted(spark: SparkSession, base: String, stage: String,
-                            n: Long, table: String): Option[DataFrame] =
     if (!isCommitted(base, stage, n)) None
-    else Some(spark.read.parquet(snapDir(base, stage, n).resolve(table).toString))
+    else Some(spark.read.parquet(snapDir(base, stage, n).resolve("data").toString))
 
   /** Close-safe recursive delete (shared by the snapshot expiry below
     * and the tmp-store cleanup in Bench / the stream queries). */
@@ -294,8 +296,12 @@ object GraphStore {
       .foreach(m => deleteSnapshotDir(snapDir(base, stage, m)))
   }
 
+  /** The latest committed snapshot's lineage, from its manifest: a local
+    * relation, so reading it runs no job and scans no file. None for an
+    * uncommitted stage or a manifest without lineage. */
   def readLineage(spark: SparkSession, base: String, stage: String): Option[DataFrame] =
-    readCommitted(spark, base, stage, latestSnapshot(base, stage), "lineage")
+    latestManifest(base, stage).flatMap(_.lineage)
+      .map(spark.createDataset(_)(Encoders.product[LineageRow]).toDF())
 
   /** Compute-or-resume: if `stage` has a committed snapshot whose
     * recorded input fingerprint matches `inputFp`, read it; otherwise

@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import graft.store.GraphStore
 import graft.streaming.StreamOps
@@ -177,6 +180,55 @@ class StoreStreamSpec extends AnyFunSuite {
       .agg(sum("row_counts")).head().getLong(0) == 1L)
   }
 
+  test("store: one commit is one SQL execution and leaves only data/ and manifest.json") {
+    val base = Files.createTempDirectory("gs_one_").toString
+    val df = spark.range(0, 1000, 1, 4).select($"id", concat(lit("v"), $"id").as("v"))
+    // Only this thread's executions count: the job group tags them.
+    val group = "store-one-commit"
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          starts.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "one commit")
+      try GraphStore.commit(spark, base, "t", df)
+      finally spark.sparkContext.clearJobGroup()
+      graft.metrics.TaskCounters.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(starts.get == 1)
+    val snap = Files.list(Paths.get(base, "stage=t", "snapshot=0"))
+    try assert(snap.iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("data", "manifest.json"))
+    finally snap.close()
+  }
+
+  test("store: an input fingerprint with quotes and backslashes round-trips; resume reuses it") {
+    val base = Files.createTempDirectory("gs_fp_").toString
+    val fp = "a\"b\\c"
+    GraphStore.commit(spark, base, "t", Seq((1L, "a")).toDF("id", "v"), inputFp = fp)
+    assert(GraphStore.latestManifest(base, "t").get.inputFp == fp)
+    var computes = 0
+    val got = GraphStore.getOrCompute(spark, base, "t", inputFp = fp) {
+      computes += 1; Seq((2L, "b")).toDF("id", "v")
+    }
+    assert(computes == 0)
+    assert(got.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
+  test("store: a manifest without a lineage field reads its lineage as None") {
+    val base = Files.createTempDirectory("gs_nolin_").toString
+    GraphStore.commit(spark, base, "t", Seq((1L, "a")).toDF("id", "v"), inputFp = "fp")
+    Files.writeString(Paths.get(base, "stage=t", "snapshot=0", "manifest.json"),
+      """{"stage":"t","snapshot":0,"rows":1,"committed_ms":5,"input_fp":"fp"}""")
+    assert(GraphStore.latestManifest(base, "t").get == GraphStore.Manifest(1L, "fp"))
+    assert(GraphStore.readLineage(spark, base, "t").isEmpty)
+  }
+
   test("pipeline: end-to-end matches q_triples/q_nodes; resume run is identical") {
     val base = Files.createTempDirectory("pipe_").toString
     val r1 = Pipeline.run(spark, TestSpark.sf0001, base, partitions = 8)
@@ -208,6 +260,30 @@ class StoreStreamSpec extends AnyFunSuite {
     val before = spark.conf.get(key)
     intercept[Exception](Pipeline.run(spark, input.toString,
       Files.createTempDirectory("pipe_fail_").toString, partitions = 8))
+    assert(spark.conf.get(key) == before)
+  }
+
+  test("pipeline: an extraction that misses its reference text fails the extract write") {
+    // One order's priority wrapped in markup: the page's html carries it
+    // as a tag the extractor strips, its reference text keeps it.
+    val input = Files.createTempDirectory("sf_bad_text_")
+    Files.list(Paths.get(TestSpark.sf0001)).forEach { f =>
+      if (f.getFileName.toString != "orders.parquet")
+        Files.copy(f, input.resolve(f.getFileName))
+    }
+    val orders = spark.read.parquet(s"${TestSpark.sf0001}/orders.parquet")
+    val bad = orders.agg(min($"o_orderkey")).head().get(0)
+    orders.withColumn("o_orderpriority", when($"o_orderkey" === bad,
+        concat(lit("<i>"), $"o_orderpriority", lit("</i>")))
+        .otherwise($"o_orderpriority"))
+      .coalesce(1).write.parquet(input.resolve("orders.parquet").toString)
+    val store = Files.createTempDirectory("pipe_bad_text_").toString
+    val key = "spark.sql.constraintPropagation.enabled"
+    val before = spark.conf.get(key)
+    val e = intercept[Exception](Pipeline.run(spark, input.toString, store, partitions = 8))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("byte-identity audit failed on")))
+    assert(GraphStore.latestSnapshot(store, "extracted") == -1L)
     assert(spark.conf.get(key) == before)
   }
 
