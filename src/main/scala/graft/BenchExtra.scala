@@ -9,6 +9,10 @@ import org.apache.spark.sql.functions._
   * frozen driver contract — Bench.scala remains the only artifact the
   * driver parses; numbers from here are cited in OPTIMIZATION_r07.md.
   *
+  * The cp_* entries run the steps of the pair-counting kernel
+  * (PairDedup.postings / pairStream / countPairs) one stage at a time;
+  * they call those steps, so they measure the code the families run.
+  *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.BenchExtra [names...]"
   * Each named component is built and written to the noop sink `reps`
   * times (SPARK_GRAFT_REPS, default 3); prints one line per rep plus
@@ -35,6 +39,15 @@ object BenchExtra {
     import graft.fixtures.Corpus
     import graft.link.Linker
     import graft.triples.Triples
+    import graft.dedup.PairDedup
+
+    // The co_purchased kernel input, unique (item = part, k = order),
+    // and the pair-counting kernel's own steps over it.
+    val maxDf = Corpus.CoOccurrenceMaxDf
+    def cpItemKeys(): DataFrame = Corpus.lineFacts(spark, sfDir, None)
+      .select(col("pk").as("item"), col("ok").cast("long").as("k")).distinct()
+    def cpPostings(): DataFrame = PairDedup.postings(cpItemKeys(), maxDf)
+    def cpPairs(): DataFrame = PairDedup.pairStream(cpPostings(), maxDf)
 
     /** Named components: each is a fresh DataFrame builder. */
     val components: Seq[(String, () => DataFrame)] = Seq(
@@ -81,24 +94,11 @@ object BenchExtra {
         Corpus.coPurchasedFrom(
           Corpus.lineFacts(spark, sfDir, Some(Corpus.canonicalIds(spark, sfDir))))),
       "touched" -> (() => Corpus.touchedEdges(spark, sfDir)),
-      // coOccurrencePairs decomposition (co_purchased shape)
-      "cp_distinct" -> (() =>
-        Corpus.lineFacts(spark, sfDir, None)
-          .select(col("pk").as("item"), col("ok").cast("long").as("k")).distinct()),
-      "cp_postings" -> (() =>
-        Corpus.lineFacts(spark, sfDir, None)
-          .select(col("pk").as("item"), col("ok").cast("long").as("k")).distinct()
-          .groupBy("item")
-          .agg(graft.functions.BoundedAggs.cappedLongList(65536)(col("k")).as("pl"))
-          .filter(col("pl.total") >= 2)),
-      "cp_pairs" -> (() =>
-        Corpus.lineFacts(spark, sfDir, None)
-          .select(col("pk").as("item"), col("ok").cast("long").as("k")).distinct()
-          .groupBy("item")
-          .agg(graft.functions.BoundedAggs.cappedLongList(65536)(col("k")).as("pl"))
-          .filter(col("pl.total") >= 2 && col("pl.total") <= 65536)
-          .select(graft.functions.PairExprs.unorderedPairs(col("pl.items"))
-            .as(Seq("k1", "k2")))),
+      // coOccurrencePairs decomposition (co_purchased shape): each entry
+      // runs one more kernel step than the one before
+      "cp_distinct" -> (() => cpItemKeys()),
+      "cp_postings" -> (() => cpPostings()),
+      "cp_pairs" -> (() => cpPairs()),
       // Reference-width embedding evidence (VERDICT r6 Missing #3): the
       // reference's vectors are 1024/1280-d float16 (ProtT5 / ESM), the
       // fixtures 64-d. These entries tile each fixture vector to 1024-d
@@ -127,16 +127,8 @@ object BenchExtra {
         graft.sim.Quant.ivfTopKSq8(wide, k = 5, nprobe = 4, maxList = 4096,
           centroids = graft.sim.Ivf.fixedCentroids(16, 1024))
       }),
-      "cp_grouped" -> (() =>
-        Corpus.lineFacts(spark, sfDir, None)
-          .select(col("pk").as("item"), col("ok").cast("long").as("k")).distinct()
-          .groupBy("item")
-          .agg(graft.functions.BoundedAggs.cappedLongList(65536)(col("k")).as("pl"))
-          .filter(col("pl.total") >= 2 && col("pl.total") <= 65536)
-          .select(graft.functions.PairExprs.unorderedPairs(col("pl.items"))
-            .as(Seq("k1", "k2")))
-          .groupBy(col("k1"), col("k2"))
-          .agg(count(lit(1)).as("n_common"))))
+      // the two-column count: the path that keys outside [0, 2^31) take
+      "cp_grouped" -> (() => PairDedup.countPairs(cpPairs(), packed = false)))
 
     val counters = new graft.metrics.TaskCounters
     spark.sparkContext.addSparkListener(counters)

@@ -107,6 +107,19 @@ object Pipeline {
     // Completed right after the pagesets commit; failed by any throw
     // before it, so no future chained on it waits forever.
     val pageSetsP = scala.concurrent.Promise[(DataFrame, Int)]()
+    // Every frame the run persists is released in the finally, whether
+    // the run commits or throws. lineFacts is persisted inside a future
+    // that can complete after a throw, so it is released through its
+    // promise; the others are recorded as they are persisted.
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      persisted += df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    val lineFactsP = scala.concurrent.Promise[DataFrame]()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
     try {
       var cLast = counters.snapshot
       val marks = scala.collection.mutable.ArrayBuffer.empty[StageMark]
@@ -152,9 +165,6 @@ object Pipeline {
       // is synchronous — the data write, then the manifest carrying its
       // lineage — so a kill leaves only manifest-less corpses that resume
       // recomputes.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
 
       // Stage 3/4 input: the CC-derived canonicalization table depends
       // only on the source tables — overlap it with extract+mentions.
@@ -176,10 +186,10 @@ object Pipeline {
       // instead. `lineitem` is not listed at all — after the lineFacts
       // fusion it has exactly ONE consumer; `documents` likewise (the
       // docFacts fusion leaves only the touched-edges endpoint list).
-      val hotTables = Seq("orders", "customer", "part", "events")
+      Seq("orders", "customer", "part", "events")
         .map(n => Corpus.table(spark, sfDir, n))
         .filter(_.queryExecution.optimizedPlan.stats.sizeInBytes <= DimPersistMaxBytes)
-        .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .foreach(persist)
       // Shared fact-grain aggregates (the lineFacts discipline applied to
       // the other two fact-shaped inputs): eventFacts is the (user,
       // event_type) grain of the event stream — four families (user /
@@ -189,22 +199,18 @@ object Pipeline {
       // seven consumers; docLangFacts rolls docFacts up to (source, lang).
       // followed_by is both its own family and the regulates input.
       // All persisted lazily — a resumed run never materializes them.
-      val eventFacts = Corpus.eventFacts(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val docFacts = Corpus.docFacts(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val docLangFacts = Corpus.docLangFactsFrom(docFacts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val followedBy = Corpus.followedByEdges(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val eventFacts = persist(Corpus.eventFacts(spark, sfDir))
+      val docFacts = persist(Corpus.docFacts(spark, sfDir))
+      val docLangFacts = persist(Corpus.docLangFactsFrom(docFacts))
+      val followedBy = persist(Corpus.followedByEdges(spark, sfDir))
       // The SHARED line-fact projection (r4 Next #2): ~14 edge families
       // all reduce the same enriched lineitem (⨝ orders ⨝ customer ⨝
       // part ⨝ canon, dims broadcast). Built as a continuation of the
       // canonicalization future and persisted lazily.
-      val lineFactsF: Future[DataFrame] = canonF.map { canon =>
+      val lineFactsF: Future[DataFrame] = lineFactsP.completeWith(canonF.map { canon =>
         Corpus.lineFacts(spark, sfDir, Some(canon))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+      }).future
       // Each registry input resolved to this run's shared frame, ready
       // as soon as the frame exists.
       def source[A](in: Families.Input[A]): Future[A] = in match {
@@ -303,9 +309,10 @@ object Pipeline {
       val nPages = GraphStore.latestManifest(storeBase, "extracted").get.rows
 
       // canonF has long resolved by now (it only needs the part table);
-      // binding it here keeps the downstream code shape unchanged.
+      // binding it here keeps the downstream code shape unchanged. A
+      // lineFacts frame that cannot be built fails the run here too.
       val canon = Await.result(canonF, Duration.Inf)
-      val lineFacts = Await.result(lineFactsF, Duration.Inf)
+      Await.result(lineFactsF, Duration.Inf)
 
       // Stage 2: mentions (broadcast trie; fact side never shuffles).
       val mentions = GraphStore.getOrCompute(spark, storeBase, "mentions",
@@ -386,12 +393,6 @@ object Pipeline {
           .repartition(32, col("bucket")))
       }
       mark("edges")
-      lineFacts.unpersist(false)
-      followedBy.unpersist(false)
-      eventFacts.unpersist(false)
-      docFacts.unpersist(false)
-      docLangFacts.unpersist(false)
-      hotTables.foreach(_.unpersist(false))
 
       Await.result(triplesF, Duration.Inf)
       val nTriples = GraphStore.latestManifest(storeBase, "edges").get.rows
@@ -414,6 +415,8 @@ object Pipeline {
         pageSetsP.tryFailure(e)
         throw e
     } finally {
+      persisted.foreach(_.unpersist(false))
+      lineFactsP.future.foreach(_.unpersist(false))
       spark.sparkContext.removeSparkListener(counters)
       spark.conf.set("spark.sql.constraintPropagation.enabled", prevCP)
     }

@@ -41,78 +41,100 @@ object PairDedup {
       .drop("__rn")
   }
 
-  /** Undirected co-occurrence pairs via a BOUNDED inverted index:
-    * (k1, k2, n_common) for every pair of numeric keys sharing >= 1
-    * item, k1 < k2, n_common = the number of shared items. The posting
-    * list per item is built with the capped aggregator
-    * (BoundedAggs.cappedLongList): an item present in more than
-    * `maxDf` keys — the stopword-gram analogue of this family — holds
-    * O(maxDf) reducer state, is DETECTED via the exact df counter, and
-    * is excluded from the pair universe (logged, never silent; a df-d
-    * posting emits d·(d−1)/2 pairs, so one hot item would otherwise go
-    * quadratic). Same discipline, same aggregator, same oracle
-    * modeling as ngramJaccardPairs. Pairs then explode MAP-SIDE from
-    * each posting — no self-join. */
+  /** Undirected co-occurrence pairs: (k1, k2, n_common) for every pair
+    * of numeric keys sharing >= 1 item, k1 < k2, n_common = the number
+    * of shared items (>= `minCommon`). The [[pairCounts]] kernel over
+    * the distinct (item, key) rows; `preDistinct` says the caller
+    * already made them unique (e.g. it distinct-ed and persisted the
+    * projection to also derive dfs/totals from the SAME universe), which
+    * skips a second full dedup shuffle. `minCommon` filters before the
+    * kernel's materialization: co_purchased / bundle_with keep a few
+    * thousand rows of a nearly-unique pair-count table (8M rows at
+    * sf0.1) that would otherwise be copied whole. */
   def coOccurrencePairs(df: DataFrame, itemCol: String, keyCol: String,
                         maxDf: Long, preDistinct: Boolean = false,
                         minCommon: Long = 1L): DataFrame = {
-    require(maxDf > 0 && maxDf <= Int.MaxValue - 1, s"maxDf out of range: $maxDf")
-    val capAgg = graft.functions.BoundedAggs.cappedLongList(maxDf.toInt)
     val proj = df.select(col(itemCol).as("item"), col(keyCol).cast("long").as("k"))
-    // preDistinct: the caller guarantees (item, key) rows are already
-    // unique (e.g. it distinct-ed and persisted the projection to also
-    // derive dfs/totals from the SAME universe) — skip the second
-    // full dedup shuffle.
-    val post = (if (preDistinct) proj else proj.distinct())
-      .groupBy("item").agg(capAgg(col("k")).as("pl"))
-      .filter(col("pl.total") >= 2)
+    pairCounts(if (preDistinct) proj else proj.distinct(), maxDf,
+        "coOccurrencePairs") { (counts, _) =>
+      if (minCommon > 1L) counts.filter(col("n_common") >= minCommon) else counts
+    }
+  }
+
+  /** The one pair-counting kernel (AᵀA over a bounded inverted index):
+    * every caller that counts the keys two items share goes through it.
+    * Input: unique `(item, k: long)` rows. Output: `finish` applied to
+    * the (k1, k2, n_common) counts, k1 < k2, materialized once
+    * (`localCheckpoint`). Its guards, each decided from the data:
+    *  - hot items: a posting is built by the capped aggregator
+    *    ([[postings]]), so an item in more than `maxDf` keys holds
+    *    O(maxDf) reducer state and is excluded from the pair universe —
+    *    counted and logged, never silent. A df-d posting emits
+    *    d·(d−1)/2 pairs; one hot item would otherwise go quadratic.
+    *  - packed key: the pair count groups on one 62-bit long when both
+    *    keys fit 31 bits, on (k1, k2) otherwise ([[countPairs]]).
+    * Both come from ONE pass over the persisted postings. `finish`
+    * receives the counts and, on request, the hot-item set (`item`
+    * column), materialized only when it is non-empty. The postings are
+    * released whether the kernel returns or throws. */
+  private[graft] def pairCounts(itemKeys: DataFrame, maxDf: Long, caller: String)(
+      finish: (DataFrame, () => Option[DataFrame]) => DataFrame): DataFrame = {
+    val post = postings(itemKeys, maxDf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE pass over the postings yields both guards: the hot-item count
-    // and the key range (which decides the packed-key grouping below).
-    val g = post.agg(
-      sum(when(col("pl.total") > maxDf, 1L).otherwise(0L)).as("nHot"),
-      max(array_max(col("pl.items"))).as("maxK"),
-      min(array_min(col("pl.items"))).as("minK")).head()
-    val nHot = if (g.isNullAt(0)) 0L else g.getLong(0)
-    if (nHot > 0)
-      println(s"[coOccurrencePairs] excluded $nHot hot items with df > $maxDf")
-    // Streaming pair generation (PairExprs.UnorderedPairs): the same
-    // (k1, k2) stream the transform/slice/flatten/explode form emitted,
-    // without materializing the d·(d−1)/2 pair array (plus slice tail
-    // copies) per posting — that materialization, not the aggregation,
-    // dominated the dense-posting families' CPU (shares_part: postings
-    // of ~10^3 suppliers per canonical part).
-    val raw = post.filter(col("pl.total") <= maxDf)
+    try {
+      val g = post.agg(
+        sum(when(col("pl.total") > maxDf, 1L).otherwise(0L)).as("nHot"),
+        max(array_max(col("pl.items"))).as("maxK"),
+        min(array_min(col("pl.items"))).as("minK")).head()
+      val nHot = if (g.isNullAt(0)) 0L else g.getLong(0)
+      if (nHot > 0)
+        println(s"[$caller] excluded $nHot hot items with df > $maxDf")
+      lazy val hot =
+        if (nHot == 0) None
+        else Some(post.filter(col("pl.total") > maxDf).select(col("item"))
+          .localCheckpoint(true))
+      val packed = !g.isNullAt(1) && !g.isNullAt(2) &&
+        g.getLong(2) >= 0L && g.getLong(1) < (1L << 31)
+      finish(countPairs(pairStream(post, maxDf), packed), () => hot)
+        .localCheckpoint(true)
+    } finally post.unpersist(false)
+  }
+
+  /** Kernel step 1: per item, the capped sorted key list `pl` =
+    * struct(items, total) (BoundedAggs.cappedLongList, exact df in
+    * `total`); items with one key are dropped (they pair with nothing). */
+  private[graft] def postings(itemKeys: DataFrame, maxDf: Long): DataFrame = {
+    require(maxDf > 0 && maxDf <= Int.MaxValue - 1, s"maxDf out of range: $maxDf")
+    itemKeys.groupBy("item")
+      .agg(graft.functions.BoundedAggs.cappedLongList(maxDf.toInt)(col("k")).as("pl"))
+      .filter(col("pl.total") >= 2)
+  }
+
+  /** Kernel step 2: the (k1, k2) stream of every complete posting
+    * (df <= maxDf), streamed by PairExprs.UnorderedPairs — no
+    * d·(d−1)/2 pair array is materialized per posting (that, not the
+    * aggregation, dominated the dense families' CPU: shares_part has
+    * postings of ~10^3 suppliers per canonical part). */
+  private[graft] def pairStream(post: DataFrame, maxDf: Long): DataFrame =
+    post.filter(col("pl.total") <= maxDf)
       .select(graft.functions.PairExprs.unorderedPairs(col("pl.items"))
         .as(Seq("k1", "k2")))
-    // The pair-count shuffle carries NEARLY-UNIQUE keys (partial
-    // aggregation cannot collapse them), so its bytes are the dominant
-    // shuffle of every co-occurrence family. When both keys fit 31
-    // bits (checked against the actual data above — never assumed),
-    // group on ONE packed long instead of two: a third less key bytes
-    // and one-word hashing. Bit-identical output either way.
-    val packable = !g.isNullAt(1) && !g.isNullAt(2) &&
-      g.getLong(2) >= 0L && g.getLong(1) < (1L << 31)
-    val counted =
-      if (packable)
-        raw.select((shiftleft(col("k1"), 32) + col("k2")).as("pk"))
-          .groupBy(col("pk"))
-          .agg(count(lit(1)).as("n_common"))
-          .select(shiftright(col("pk"), 32).as("k1"),
-            (col("pk").bitwiseAND(lit(0x7fffffffL))).as("k2"),
-            col("n_common"))
-      else
-        raw.groupBy(col("k1"), col("k2"))
-          .agg(count(lit(1)).as("n_common"))
-    // minCommon is applied BEFORE the materialization: a caller that
-    // only wants pairs sharing >= 2 items (co_purchased / bundle_with)
-    // otherwise pays a localCheckpoint copy of the full nearly-unique
-    // pair-count table (8M rows at sf0.1) just to filter it to a few
-    // thousand rows afterwards.
-    val pairs = (if (minCommon > 1L) counted.filter(col("n_common") >= minCommon)
-                 else counted)
-      .localCheckpoint(true)
-    post.unpersist(false)
-    pairs
-  }
+
+  /** Kernel step 3: (k1, k2, n_common). The pair-count shuffle carries
+    * NEARLY-UNIQUE keys (partial aggregation cannot collapse them), so
+    * its bytes dominate every caller's shuffle. `packed` (both keys in
+    * [0, 2^31), checked against the data by the kernel, never assumed)
+    * groups on ONE long instead of two: a third less key bytes and
+    * one-word hashing. Bit-identical output either way. */
+  private[graft] def countPairs(pairs: DataFrame, packed: Boolean): DataFrame =
+    if (packed)
+      pairs.select((shiftleft(col("k1"), 32) + col("k2")).as("pk"))
+        .groupBy(col("pk"))
+        .agg(count(lit(1)).as("n_common"))
+        .select(shiftright(col("pk"), 32).as("k1"),
+          col("pk").bitwiseAND(lit(0x7fffffffL)).as("k2"),
+          col("n_common"))
+    else
+      pairs.groupBy(col("k1"), col("k2"))
+        .agg(count(lit(1)).as("n_common"))
 }

@@ -237,13 +237,17 @@ object GraphBreadthQueries {
     // from recall-spec-gated to fully oracle-checked: seeds, every
     // assignment, every floor-mean update and the final cluster census
     // replay bit-for-bit in DuckDB (generated MATERIALIZED CTEs, the
-    // q_kcore discipline).
+    // q_kcore discipline). The centroid ships as its comma-joined
+    // coordinates: a row canonicalizer that sorts on every column
+    // cannot hash an array value.
     "q_kmeans" -> ((s, dir) => {
       tune(s)
       graft.sim.KMeansInt.trainAssign(
         Corpus.table(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("emb")),
         c = KmeansC, iters = KmeansIters)
+        .withColumn("centroid",
+          array_join(col("centroid").cast("array<string>"), ","))
     }),
     // Fixed-round k-core peeling (k=3, 6 rounds) over the chain+
     // doubling page graph (edges k—k+1 and k—2k where both endpoints
@@ -502,7 +506,8 @@ object GraphBreadthQueries {
     }.mkString(",\n", ",\n", "")
     s"""$head$rounds,
        |${assignCte("af", s"c$iters")}
-       |SELECT ct.cid, CAST(n.n AS BIGINT) n_members, ct.z centroid
+       |SELECT ct.cid, CAST(n.n AS BIGINT) n_members,
+       |  array_to_string(ct.z, ',') centroid
        |FROM (SELECT cid, count(*) n FROM af GROUP BY 1) n
        |JOIN c$iters ct USING (cid)""".stripMargin
   }

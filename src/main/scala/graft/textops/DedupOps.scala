@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * Scale design notes:
   *  - exact dedup: one shuffle on xxhash64(text) — group on the hash,
   *    not the full text, so shuffle keys are 8 bytes;
-  *  - jaccard: inverted index (explode shingles → self-join on shingle)
-  *    instead of all-pairs; hot shingles are capped by document
+  *  - jaccard: the shared pair-counting kernel over a shingle inverted
+  *    index instead of all-pairs; hot shingles are capped by document
   *    frequency to bound the quadratic blowup exactly the way public
   *    near-dup pipelines do;
   *  - minhash: signatures are one narrow shuffle per doc; banding makes
@@ -34,94 +34,39 @@ object DedupOps {
           toks => array_distinct(TextOps.shingles(toks, n))).as("shs"))
       .filter(size(col("shs")) > 0)
 
-  /** Exact n-gram Jaccard pairs with similarity >= tau, via inverted
-    * index. `maxDf` excludes shingles present in more than maxDf docs
-    * from the WHOLE shingle universe (stopword-gram guard at scale): a
-    * posting of d docs emits d·(d-1)/2 pairs, so the default 500 caps
-    * any one shingle at ~125k pairs — a cap of 10^6 would let one hot
-    * shingle emit 5·10^11 pairs. Excluded shingles are removed from both
-    * the pair evidence (`common`) AND the per-doc sizes, so the filter
-    * is a consistent exact Jaccard over the retained universe — dropping
-    * them only from the numerator would silently deflate similarity for
-    * docs dominated by mid-frequency shingles. Exclusions are counted
-    * and logged (never silent), and the oracle SQL models the same cap.
+  /** Exact n-gram Jaccard pairs with similarity >= tau: the shingle
+    * inverted index fed to the [[graft.dedup.PairDedup.pairCounts]]
+    * kernel (its guards are listed there), plus the retained-universe
+    * sizes and the tau filter. `maxDf` excludes a shingle present in
+    * more than maxDf docs from the WHOLE shingle universe (stopword-gram
+    * guard at scale): the default 500 caps any one shingle at ~125k
+    * pairs, where a cap of 10^6 would let one hot shingle emit 5·10^11.
+    * Excluded shingles are removed from both the pair evidence
+    * (`common`) AND the per-doc sizes, so the filter is a consistent
+    * exact Jaccard over the retained universe — dropping them only from
+    * the numerator would silently deflate similarity for docs dominated
+    * by mid-frequency shingles. The oracle SQL models the same cap.
     * Output: (id1, id2, common, size1, size2) — integers only; id1 < id2. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, tau: Double, maxDf: Long = 500L): DataFrame = {
-    require(maxDf > 0 && maxDf <= Int.MaxValue - 1, s"maxDf out of range: $maxDf")
     val sets = shingleSets(docs, idCol, textCol, n)
-    val inv = sets.select(col("doc_id").cast("long").as("doc_id"),
-      explode(col("shs")).as("sh"))
-    // One shuffle builds the posting list per shingle via the BOUNDED
-    // aggregator: a stopword-gram present in O(corpus) documents holds
-    // maxDf+1 elements of reducer state (plus an exact df counter), not
-    // the full posting list — collect_list here was the one unbounded
-    // buffer left in the dedup family (at 10^12 docs a hot shingle's
-    // list is O(corpus) inside a single aggregation buffer, the same
-    // defect class BoundedAggs.topKCount fixed for edge evidence).
-    // Persisted so the hot-shingle action and the pair emission share
-    // one inverted-index shuffle; released once pairs are materialized.
-    val capAgg = graft.functions.BoundedAggs.cappedLongList(maxDf.toInt)
-    val allPostings = inv.groupBy("sh")
-      .agg(capAgg(col("doc_id")).as("pl"))
-      .filter(col("pl.total") >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE pass over the postings yields the hot-shingle count AND the
-    // doc-id range (the packed-key gate below); the hot SET itself is
-    // only materialized when it is non-empty — the common no-hot case
-    // previously paid a localCheckpoint + count of an empty frame.
-    val g = allPostings.agg(
-      sum(when(col("pl.total") > maxDf, 1L).otherwise(0L)).as("nHot"),
-      max(array_max(col("pl.items"))).as("maxK"),
-      min(array_min(col("pl.items"))).as("minK")).head()
-    val nHot = if (g.isNullAt(0)) 0L else g.getLong(0)
-    if (nHot > 0)
-      println(s"[ngramJaccardPairs] excluded $nHot hot shingles with df > $maxDf from the shingle universe")
-    val hot =
-      if (nHot == 0) null
-      else allPostings.filter(col("pl.total") > maxDf)
-        .select(col("sh")).localCheckpoint(true)
-    // Complete (never-truncated) sorted postings: total <= maxDf = cap.
-    // Pairs stream from each posting via the O(1)-memory generator
-    // (PairExprs.UnorderedPairs) — same (id1, id2) stream as the old
-    // transform/slice/flatten/explode form, none of its per-posting
-    // pair-array materialization. The pair-count groups on one packed
-    // 62-bit key when doc ids fit 31 bits (checked above) — the count
-    // over nearly-unique pairs is this operator's dominant aggregation.
-    val rawPairs = allPostings.filter(col("pl.total") <= maxDf)
-      .select(graft.functions.PairExprs.unorderedPairs(col("pl.items"))
-        .as(Seq("id1", "id2")))
-    val packable = !g.isNullAt(1) && !g.isNullAt(2) &&
-      g.getLong(2) >= 0L && g.getLong(1) < (1L << 31)
-    val pairs =
-      if (packable)
-        rawPairs.select((shiftleft(col("id1"), 32) + col("id2")).as("pk"))
-          .groupBy(col("pk"))
-          .agg(count(lit(1)).as("common"))
-          .select(shiftright(col("pk"), 32).as("id1"),
-            col("pk").bitwiseAND(lit(0x7fffffffL)).as("id2"),
-            col("common"))
-      else
-        rawPairs.groupBy(col("id1"), col("id2"))
-          .agg(count(lit(1)).as("common"))
-    // Retained-universe sizes: identical to the raw set sizes unless hot
-    // shingles exist, in which case each doc's size counts only shingles
-    // with df <= maxDf (broadcast anti-join against the tiny hot set).
-    val sizes =
-      if (nHot == 0) sets.select(col("doc_id"), size(col("shs")).as("sz"))
-      else inv.join(broadcast(hot), Seq("sh"), "left_anti")
-        .groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    // ONE materialization of the (tiny, tau-filtered) result, then the
-    // cached inverted index is released — repeated calls in a session
-    // must not accumulate cached partitions.
-    val result = pairs
-      .join(sizes.select(col("doc_id").as("id1"), col("sz").as("size1")), "id1")
-      .join(sizes.select(col("doc_id").as("id2"), col("sz").as("size2")), "id2")
-      .filter(col("common") * (1.0 + tau) >= lit(tau) * (col("size1") + col("size2")))
-      .select("id1", "id2", "common", "size1", "size2")
-      .localCheckpoint(true)
-    allPostings.unpersist(false)
-    result
+    val inv = sets.select(explode(col("shs")).as("item"),
+      col("doc_id").cast("long").as("k"))
+    graft.dedup.PairDedup.pairCounts(inv, maxDf, "ngramJaccardPairs") { (counts, hot) =>
+      // Retained-universe sizes: the raw set sizes unless hot shingles
+      // exist, in which case each doc's size counts only shingles with
+      // df <= maxDf (broadcast anti-join against the tiny hot set).
+      val sizes = hot() match {
+        case None => sets.select(col("doc_id"), size(col("shs")).as("sz"))
+        case Some(h) => inv.join(broadcast(h), Seq("item"), "left_anti")
+          .groupBy(col("k").as("doc_id")).agg(count(lit(1)).as("sz"))
+      }
+      counts.select(col("k1").as("id1"), col("k2").as("id2"), col("n_common").as("common"))
+        .join(sizes.select(col("doc_id").as("id1"), col("sz").as("size1")), "id1")
+        .join(sizes.select(col("doc_id").as("id2"), col("sz").as("size2")), "id2")
+        .filter(col("common") * (1.0 + tau) >= lit(tau) * (col("size1") + col("size2")))
+        .select("id1", "id2", "common", "size1", "size2")
+    }
   }
 
   // ---------------------------------------------------------------

@@ -249,4 +249,60 @@ class MergeDedupAggSpec extends AnyFunSuite {
       preDistinct = true))
     assert(a.nonEmpty && a == b)
   }
+
+  /** The pair-counting kernel's definition, by brute force: a self-join
+    * on item over the distinct (item, k) rows, items in more than maxDf
+    * keys dropped first. */
+  private def bruteCoOccurrence(raw: org.apache.spark.sql.DataFrame, maxDf: Long,
+                                minCommon: Long): Set[(Long, Long, Long)] = {
+    val u = raw.distinct()
+    val kept = u.join(u.groupBy("item").count().filter($"count" <= maxDf)
+      .select("item"), "item")
+    kept.as("a").join(kept.as("b"), $"a.item" === $"b.item" && $"a.k" < $"b.k")
+      .groupBy($"a.k".as("k1"), $"b.k".as("k2")).agg(count(lit(1)).as("n_common"))
+      .filter($"n_common" >= minCommon)
+      .as[(Long, Long, Long)].collect().toSet
+  }
+
+  /** 40 items over a pool of 24 keys (1-5 keys each, one duplicated
+    * row), plus item 100 in exactly maxDf keys (kept) and item 101 in
+    * maxDf + 1 keys (hot: excluded from the pair universe). */
+  private def incidence(key: Int => Long, maxDf: Int): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(11)
+    val rows = (0 until 40).flatMap { i =>
+      rnd.shuffle((0 until 24).toList).take(1 + rnd.nextInt(5)).map(j => (i.toLong, key(j)))
+    } ++ Seq((0L, key(0)), (0L, key(0))) ++
+      (0 until maxDf).map(j => (100L, key(j))) ++
+      (0 to maxDf).map(j => (101L, key(23 - j)))
+    rows.toDF("item", "k")
+  }
+
+  private def checkCoOccurrence(key: Int => Long): Unit = {
+    val maxDf = 6
+    val raw = incidence(key, maxDf)
+    for (minCommon <- Seq(1L, 2L)) {
+      val got = PairDedup.coOccurrencePairs(raw, "item", "k", maxDf, minCommon = minCommon)
+        .select("k1", "k2", "n_common").as[(Long, Long, Long)].collect()
+      val want = bruteCoOccurrence(raw, maxDf, minCommon)
+      assert(got.length == got.toSet.size)
+      assert(want.exists(_._3 >= 2) && got.toSet == want, s"minCommon=$minCommon")
+    }
+  }
+
+  test("coOccurrencePairs == brute-force self-join count on 31-bit keys (packed count)") {
+    checkCoOccurrence(j => j.toLong * 3L)
+  }
+
+  test("coOccurrencePairs == brute-force self-join count on negative and >= 2^31 keys (two-column count)") {
+    checkCoOccurrence(j => if (j % 2 == 0) -1000003L * (j + 1) else (1L << 31) + 7919L * j)
+  }
+
+  test("coOccurrencePairs: an input that throws leaves nothing in the session cache") {
+    spark.catalog.clearCache()
+    val bad = spark.range(20).select(($"id" % 4).as("item"),
+      when($"id" === 13, raise_error(lit("bad incidence row")))
+        .otherwise($"id").cast("long").as("k"))
+    intercept[Exception](PairDedup.coOccurrencePairs(bad, "item", "k", maxDf = 8))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

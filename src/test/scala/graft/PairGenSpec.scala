@@ -5,10 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.PairExprs
 
 /** The streaming pair generator must emit the IDENTICAL pair stream the
-  * composable transform/slice/flatten/explode form emitted (it replaced
-  * that form in PairDedup.coOccurrencePairs / DedupOps.ngramJaccardPairs
-  * / Triples.coOrderedFromSets — value-identity is what keeps those
-  * oracles green). */
+  * composable transform/slice/flatten/explode form emitted. It replaced
+  * that form in the pair-counting kernel (PairDedup.pairStream, behind
+  * coOccurrencePairs and DedupOps.ngramJaccardPairs) and in
+  * Triples.coOrderedFromSets; value-identity is what keeps those
+  * oracles green. */
 class PairGenSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._

@@ -250,6 +250,15 @@ class StoreStreamSpec extends AnyFunSuite {
     }
   }
 
+  /** True once the session cache is empty, polled for up to 10 s: the
+    * family futures of a failed run can still be finishing. */
+  private def cacheDrains(): Boolean = {
+    val deadline = System.nanoTime() + 10000000000L
+    while (!spark.sharedState.cacheManager.isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    spark.sharedState.cacheManager.isEmpty
+  }
+
   test("pipeline: a failing run throws and restores the session conf") {
     val input = Files.createTempDirectory("sf_no_lineitem_")
     Files.list(Paths.get(TestSpark.sf0001)).forEach { f =>
@@ -258,9 +267,11 @@ class StoreStreamSpec extends AnyFunSuite {
     }
     val key = "spark.sql.constraintPropagation.enabled"
     val before = spark.conf.get(key)
+    spark.catalog.clearCache()
     intercept[Exception](Pipeline.run(spark, input.toString,
       Files.createTempDirectory("pipe_fail_").toString, partitions = 8))
     assert(spark.conf.get(key) == before)
+    assert(cacheDrains())
   }
 
   test("pipeline: an extraction that misses its reference text fails the extract write") {
@@ -280,11 +291,13 @@ class StoreStreamSpec extends AnyFunSuite {
     val store = Files.createTempDirectory("pipe_bad_text_").toString
     val key = "spark.sql.constraintPropagation.enabled"
     val before = spark.conf.get(key)
+    spark.catalog.clearCache()
     val e = intercept[Exception](Pipeline.run(spark, input.toString, store, partitions = 8))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("byte-identity audit failed on")))
     assert(GraphStore.latestSnapshot(store, "extracted") == -1L)
     assert(spark.conf.get(key) == before)
+    assert(cacheDrains())
   }
 
   test("store census == q_graph_census: every censused family persists at full cardinality") {

@@ -5,6 +5,9 @@ Usage: compare.py <sfDir> <verifyOutDir>
 Reads <verifyOutDir>/oracle_sql.json, registers each parquet table from
 <sfDir> as a DuckDB view, runs each oracle, and compares row-sets
 (columns sorted by name, rows sorted) against the Spark parquet dumps.
+Both frames must also sort on all their columns with pandas `sort_values`,
+which hashes every value: an output column that cannot be hashed (e.g. an
+array) fails here, as it fails any compare that canonicalizes that way.
 """
 import json, sys, glob, os
 import duckdb
@@ -32,6 +35,11 @@ for q, sql in sorted(oracle.items()):
     if list(got.columns) != list(exp.columns):
         print(f"{q}: SCHEMA MISMATCH {list(got.columns)} vs {list(exp.columns)}")
         fails += 1; continue
+    try:
+        for df in (got, exp):
+            df.sort_values(list(df.columns))
+    except Exception as e:
+        print(f"{q}: UNSORTABLE {type(e).__name__}: {e}"); fails += 1; continue
     gs = sorted(map(repr, got.itertuples(index=False, name=None)))
     es = sorted(map(repr, exp.itertuples(index=False, name=None)))
     if len(gs) != len(es):
