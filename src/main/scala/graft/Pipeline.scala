@@ -17,6 +17,13 @@ import graft.triples.Triples
   * bucketed by id hash, edges by subject hash), every stage committed
   * as a resumable snapshot with per-partition lineage.
   *
+  * Resume: the seven committed stages are declared once, in
+  * [[StageTable]]. A stage's fingerprint is its code version, its run
+  * parameters and the fingerprints of the stages it reads. Bumping a
+  * stage's version recomputes exactly that stage and the stages
+  * downstream of it; changing `mult` recomputes the page stages and
+  * edges; touching any input file recomputes every stage.
+  *
   * Scale posture: pages are explicitly repartitioned by xxhash64(url)
   * so downstream per-page work (extract, n-gram explode, co-mention
   * join) is uniformly spread and the same partitioning is reused until
@@ -56,24 +63,73 @@ object Pipeline {
   /** Scan-size cap for persisting a hot dimension table (see `run`). */
   private val DimPersistMaxBytes = 1024L << 20
 
+  /** A committed stage: its name, its code version (bumped when the
+    * stage's output changes for the same inputs), what it reads
+    * (upstream stages or run parameters) and, if it is written bucketed,
+    * its bucket key. */
+  private[graft] final case class Stage(name: String, version: String,
+      reads: Seq[String], bucketKey: Option[String] = None)
+
+  /** The stages `run` commits, each after every stage it reads. The
+    * resume fingerprints, [[Stages]] and the bucketed writes derive from
+    * this table. Only canonical_ids and extracted read the run
+    * parameters `input` (the input identity) and `mult`; every other
+    * stage that reads an input table reaches the input identity through
+    * them. nodes reads canonical_ids because its product ids must be the
+    * components connected components picks; edges semi-joins against
+    * nodes and reads the page sets. nodes-typed-v6: the store persists
+    * the full declared schema (all 14 node types, complete relational
+    * entity universes). */
+  private[graft] val StageTable: Seq[Stage] = Seq(
+    Stage("canonical_ids", "canon-cc-v1", Seq("input")),
+    Stage("extracted", "extract-v3", Seq("input", "mult")),
+    Stage("mentions", "mentions-trie-v2", Seq("extracted")),
+    Stage("pagesets", "pagesets-v1", Seq("mentions", "canonical_ids")),
+    Stage("triples", "triples-v1", Seq("pagesets", "canonical_ids")),
+    Stage("nodes", "nodes-typed-v6", Seq("canonical_ids"), Some("id")),
+    Stage("edges", "edges-fused-v8", Seq("pagesets", "canonical_ids", "nodes"), Some("subject_id")))
+
   /** Stage names the pipeline commits — the retention sweep below and
     * external tooling share this list. */
-  val Stages: Seq[String] = Seq("canonical_ids", "extracted", "mentions",
-    "pagesets", "triples", "nodes", "edges")
+  val Stages: Seq[String] = StageTable.map(_.name)
 
-  /** Plan-audit hook: when SPARK_GRAFT_PLAN_DIR is set, write the
-    * formatted physical plan of a stage frame there before it executes
-    * (debug-only; the bench never sets it). */
-  private def dbgPlan(name: String, df: DataFrame): DataFrame = {
-    sys.env.get("SPARK_GRAFT_PLAN_DIR").foreach { d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$d/$name.txt"),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+  /** Each stage's resume fingerprint: its version and, for each thing it
+    * reads, `name={fingerprint}`, where a run parameter's fingerprint is
+    * its value from `params`. Built from versions and parameters, not
+    * from upstream snapshot ids, so every fingerprint is known before
+    * any stage runs: `run` decides at startup, from the edges
+    * fingerprint, whether to build the edge families at all. The result
+    * also holds `params` itself. */
+  private[graft] def fingerprints(table: Seq[Stage],
+                                  params: Map[String, String]): Map[String, String] =
+    table.foldLeft(params) { (fp, s) =>
+      fp + (s.name -> (s.version +: s.reads.map(r => s"$r={${fp(r)}}")).mkString(";"))
     }
-    df
+
+  /** The input's identity: `sfDir` and a digest of the sorted (relative
+    * path, length, modification time) of every file under it. Listed
+    * through Hadoop, so a non-local `sfDir` works; one listing, no job. */
+  private def inputIdentity(spark: SparkSession, sfDir: String): String = {
+    val root = new org.apache.hadoop.fs.Path(sfDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootLen = fs.makeQualified(root).toString.length
+    val files = fs.listFiles(root, true)
+    val entries = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath.toString.drop(rootLen)}:${f.getLen}:${f.getModificationTime}")
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(entries.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+    s"$sfDir#${java.util.HexFormat.of.formatHex(sha, 0, 8)}"
   }
+
+  /** One exchange on the bucket key before a bucketed write: without it
+    * every upstream partition writes its own file per bucket directory
+    * (~270 files of ~16 KB for nodes, 5,439 of ~7 KB for edges, at
+    * sf0.1), and every read of the snapshot pays the per-file
+    * open/close. After: one task per occupied bucket, 32 right-sized
+    * files, for one shuffle of the stage's rows. */
+  private def bucketed(df: DataFrame, key: String): DataFrame =
+    df.withColumn("bucket", pmod(xxhash64(col(key)), lit(32)))
+      .repartition(32, col("bucket"))
 
   def run(spark: SparkSession, sfDir: String, storeBase: String,
           partitions: Int, mult: Int = 1, retainSnapshots: Int = 2): Result = {
@@ -144,21 +200,25 @@ object Pipeline {
         cLast = c
       }
 
-      // Per-stage input fingerprints: a changed corpus or parameterization
-      // invalidates downstream committed snapshots on resume (the manifest
-      // records the fp; GraphStore recomputes on mismatch).
-      val fpCorpus = s"corpus;sfDir=$sfDir;mult=$mult"
-      val fpExtract = s"extract-v3;$fpCorpus"
-      val fpMentions = s"mentions-trie-v2;$fpExtract;dict=aliasDict"
-      val fpCanon = s"canon-cc-v1;sfDir=$sfDir"
-      val fpTriples = s"triples-v1;$fpMentions;$fpCanon"
-      // v6 (round 4 final): the store persists the FULL declared schema —
-      // all 14 node types (complete relational entity universes plus the
-      // name-family vocabulary, not only text-mentioned ones) and all 40
-      // edge families (reference edge-vocabulary parity).
-      val fpNodes = s"nodes-typed-v6;$fpCanon;attrs=nodeAttrs;full-univ;" +
-        "+order+doc+ptype+fam+user+evt+lang+src+supp+region+brand+seg"
-      val fpEdges = s"edges-fused-v8;$fpMentions;$fpCanon;all-40-families-v1"
+      // The manifest records each stage's fingerprint; GraphStore
+      // resumes a snapshot only when it matches.
+      val fp = fingerprints(StageTable,
+        Map("input" -> inputIdentity(spark, sfDir), "mult" -> mult.toString))
+      // Every commit: the stage's fingerprint and bucket layout from the
+      // table. Plan-audit hook: when SPARK_GRAFT_PLAN_DIR is set, the
+      // formatted physical plan of each computed stage frame is written
+      // there before it executes (debug-only; the bench never sets it).
+      def stage(name: String)(body: => DataFrame): DataFrame = {
+        val key = StageTable.find(_.name == name).get.bucketKey
+        GraphStore.getOrCompute(spark, storeBase, name,
+            partitionByCols = key.map(_ => "bucket").toSeq, inputFp = fp(name)) {
+          val df = key.fold(body)(bucketed(body, _))
+          sys.env.get("SPARK_GRAFT_PLAN_DIR").foreach(d => java.nio.file.Files.writeString(
+            java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)).resolve(s"$name.txt"),
+            df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)))
+          df
+        }
+      }
 
       // Stage-commit pipelining: independent stages run as concurrent
       // Spark jobs (the scheduler interleaves their tasks). Each commit
@@ -168,12 +228,7 @@ object Pipeline {
 
       // Stage 3/4 input: the CC-derived canonicalization table depends
       // only on the source tables — overlap it with extract+mentions.
-      val canonF = Future {
-        GraphStore.getOrCompute(spark, storeBase, "canonical_ids",
-          inputFp = fpCanon) {
-          Corpus.canonicalIds(spark, sfDir)
-        }
-      }
+      val canonF = Future(stage("canonical_ids")(Corpus.canonicalIds(spark, sfDir)))
 
       // Hot DIMENSION tables: the 20+ family builders each scan the base
       // tables independently (Spark has no cross-subtree scan dedup);
@@ -230,8 +285,7 @@ object Pipeline {
       // keep well under half the slots busy). Awaited before the edges
       // stage, which semi-joins against the committed node ids.
       val nodesF = Future {
-        GraphStore.getOrCompute(spark, storeBase, "nodes",
-            partitionByCols = Seq("bucket"), inputFp = fpNodes) {
+        stage("nodes") {
           // Multi-adapter node merge (reference: one adapter per source —
           // uniprot/drug/go/... — all landing in one typed node table):
           // the COMPLETE relational entity universes + every registry node
@@ -245,17 +299,9 @@ object Pipeline {
             .map(_.withColumn("props_arr", map().cast("map<string,array<string>>"))
               .withColumn("embedding", lit(null).cast("array<float>")))
             .reduce(_ unionByName _)
-          // One exchange on the bucket key before the partitioned write:
-          // without it every upstream partition of the 12-family union
-          // writes its own file per bucket directory (~270 files of
-          // ~16 KB at sf0.1), and every read of the snapshot pays the
-          // per-file open/close. After: one task per occupied bucket, 32
-          // right-sized files.
           Triples.nodesTyped(Corpus.relationalEntityNodes(spark, sfDir),
               Corpus.nodeAttrs(spark, sfDir))
             .unionByName(plain)
-            .withColumn("bucket", pmod(xxhash64(col("id")), lit(32)))
-            .repartition(32, col("bucket"))
         }
       }
 
@@ -271,7 +317,7 @@ object Pipeline {
       // started and nothing here materializes. Job labels are thread-local,
       // so each family's jobs stay attributable.
       val edgesFresh =
-        GraphStore.latestManifest(storeBase, "edges").map(_.inputFp).contains(fpEdges)
+        GraphStore.latestManifest(storeBase, "edges").map(_.inputFp).contains(fp("edges"))
       def edgeFrame[A](f: Families.EdgeFamily[A]): Future[DataFrame] =
         source(f.input).map { in =>
           spark.sparkContext.setJobDescription(s"edges: ${f.label}")
@@ -292,8 +338,7 @@ object Pipeline {
       // The audit runs inside the write: a page whose extraction misses
       // its reference hash raises, failing the write before the manifest,
       // so a corrupt extraction is never committed, let alone resumed.
-      val extracted = GraphStore.getOrCompute(spark, storeBase, "extracted",
-          inputFp = fpExtract) {
+      val extracted = stage("extracted") {
         amplify(Corpus.pages(spark, sfDir)
             .repartition(partitions, xxhash64(col("url"))), mult)
           .select(
@@ -315,8 +360,7 @@ object Pipeline {
       Await.result(lineFactsF, Duration.Inf)
 
       // Stage 2: mentions (broadcast trie; fact side never shuffles).
-      val mentions = GraphStore.getOrCompute(spark, storeBase, "mentions",
-          inputFp = fpMentions) {
+      val mentions = stage("mentions") {
         Linker.mentions(extracted.select("url", "text"), Corpus.aliasDict(spark, sfDir))
       }
       mark("mentions")
@@ -324,10 +368,7 @@ object Pipeline {
       // Shared intermediate: per-page canonical entity sets — computed
       // (scan + group of the big mentions table) ONCE, consumed by both
       // the triple and the evidence/edge stages.
-      val pageSets = GraphStore.getOrCompute(spark, storeBase, "pagesets",
-          inputFp = s"pagesets-v1;$fpMentions;$fpCanon") {
-        Triples.perPageEntitySets(mentions, canon)
-      }
+      val pageSets = stage("pagesets")(Triples.perPageEntitySets(mentions, canon))
       // Hub-skew guard: past the page threshold, witness aggregation
       // runs two-phase salted (value-hash cells) so a popular edge's
       // fan-in spreads over 8 reducers before the bounded cap applies —
@@ -337,12 +378,7 @@ object Pipeline {
         else 1))
       // Triples is a reporting artifact (edges re-derive with evidence),
       // so it runs concurrently with the nodes stage.
-      val triplesF = Future {
-        GraphStore.getOrCompute(spark, storeBase, "triples",
-          inputFp = fpTriples) {
-          Triples.extractFromSets(pageSets, canon)
-        }
-      }
+      val triplesF = Future(stage("triples")(Triples.extractFromSets(pageSets, canon)))
       // The edges union PLAN: the evidence fusion chains on the pagesets
       // commit + lineFacts, every other family frame was already built in
       // a parallel future above (ALL 40 declared edge families — KgSchema
@@ -378,20 +414,7 @@ object Pipeline {
       // sources/evidence set-union, reference ppi_adapter.py:1268-1303),
       // then skip-bad-relationships at the sink (reference
       // biocypher_config skip_bad_relationships) = endpoints must exist.
-      GraphStore.getOrCompute(spark, storeBase, "edges",
-          partitionByCols = Seq("bucket"), inputFp = fpEdges) {
-        dbgPlan("edges", KgSchema.dropBadRelationships(
-            Await.result(edgesPlanF, Duration.Inf), nodes)
-          .withColumn("bucket", pmod(xxhash64(col("subject_id")), lit(32)))
-          // One exchange on the bucket key before the partitioned write:
-          // the ~40-family union otherwise leaves ~170 writing tasks that
-          // each open a file per bucket directory — 5,439 files averaging
-          // 7 KB at sf0.1, paid again by every read of the snapshot.
-          // After: one task per occupied bucket, 32 right-sized files.
-          // Costs one shuffle of the final edge set (~40 MB
-          // zstd-equivalent), which the file-open savings repay.
-          .repartition(32, col("bucket")))
-      }
+      stage("edges")(KgSchema.dropBadRelationships(Await.result(edgesPlanF, Duration.Inf), nodes))
       mark("edges")
 
       Await.result(triplesF, Duration.Inf)

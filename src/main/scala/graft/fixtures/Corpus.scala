@@ -975,28 +975,27 @@ object Corpus {
         regexp_replace(col("cid"), "^PART:", "").cast("long").as("pid"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Lazy broadcast scalars (no extra driver-side action): the order
-    // total and per-part dfs ride the same persisted universe the
-    // pairs are built from and join back as broadcasts.
-    val nOrdersDf = op.agg(countDistinct(col("ok")).as("nn"))
-    val dfs = op.groupBy(col("pid")).agg(count(lit(1)).as("df"))
-    val pairs = graft.dedup.PairDedup
-      .coOccurrencePairs(op, "ok", "pid", CoOccurrenceMaxDf, preDistinct = true,
-        minCommon = 2L)
-    val out = pairs
-      .join(broadcast(dfs.select(col("pid").as("k1"), col("df").as("df1"))), Seq("k1"))
-      .join(broadcast(dfs.select(col("pid").as("k2"), col("df").as("df2"))), Seq("k2"))
-      .crossJoin(broadcast(nOrdersDf))
-      .select(
-        concat(lit("PART:"), col("k1")).as("subject_id"),
-        lit("bundle_with").as("relation_label"),
-        concat(lit("PART:"), col("k2")).as("object_id"),
-        col("n_common"),
-        floor((col("n_common") * lit(1000L) * col("nn")) /
-          (col("df1") * col("df2"))).cast("long").as("lift_milli"))
-      .localCheckpoint(true)
-    op.unpersist(false)
-    out
+    try {
+      // Lazy broadcast scalars (no extra driver-side action): the order
+      // total and per-part dfs ride the same persisted universe the
+      // pairs are built from and join back as broadcasts.
+      val nOrdersDf = op.agg(countDistinct(col("ok")).as("nn"))
+      val dfs = op.groupBy(col("pid")).agg(count(lit(1)).as("df"))
+      graft.dedup.PairDedup
+        .coOccurrencePairs(op, "ok", "pid", CoOccurrenceMaxDf, preDistinct = true,
+          minCommon = 2L)
+        .join(broadcast(dfs.select(col("pid").as("k1"), col("df").as("df1"))), Seq("k1"))
+        .join(broadcast(dfs.select(col("pid").as("k2"), col("df").as("df2"))), Seq("k2"))
+        .crossJoin(broadcast(nOrdersDf))
+        .select(
+          concat(lit("PART:"), col("k1")).as("subject_id"),
+          lit("bundle_with").as("relation_label"),
+          concat(lit("PART:"), col("k2")).as("object_id"),
+          col("n_common"),
+          floor((col("n_common") * lit(1000L) * col("nn")) /
+            (col("df1") * col("df2"))).cast("long").as("lift_milli"))
+        .localCheckpoint(true)
+    } finally op.unpersist(false)
   }
 
   /** (EVT, regulates, EVT) — the DIRECTIONAL regulatory family (gene
@@ -1014,25 +1013,24 @@ object Corpus {
       .select(col("subject_id").as("src"), col("object_id").as("dst"),
         col("n_times").as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rowM = t.groupBy(col("src")).agg(sum(col("n")).as("r"))
-    val colM = t.groupBy(col("dst")).agg(sum(col("n")).as("c"))
-    // Lazy broadcast scalar (no driver-side action), as in bundle_with.
-    val totalDf = t.agg(sum(col("n")).as("tt"))
-    val out = t
-      .join(broadcast(rowM), Seq("src"))
-      .join(broadcast(colM), Seq("dst"))
-      .crossJoin(broadcast(totalDf))
-      .select(
-        col("src").as("subject_id"),
-        lit("regulates").as("relation_label"),
-        col("dst").as("object_id"),
-        when((col("n") * col("tt")) >= (col("r") * col("c")), lit("amplifies"))
-          .otherwise(lit("dampens")).as("mode"),
-        floor((col("n") * lit(1000L) * col("tt")) / (col("r") * col("c")))
-          .cast("long").as("lift_milli"))
-      .localCheckpoint(true)
-    t.unpersist(false)
-    out
+    try {
+      val rowM = t.groupBy(col("src")).agg(sum(col("n")).as("r"))
+      val colM = t.groupBy(col("dst")).agg(sum(col("n")).as("c"))
+      // Lazy broadcast scalar (no driver-side action), as in bundle_with.
+      val totalDf = t.agg(sum(col("n")).as("tt"))
+      t.join(broadcast(rowM), Seq("src"))
+        .join(broadcast(colM), Seq("dst"))
+        .crossJoin(broadcast(totalDf))
+        .select(
+          col("src").as("subject_id"),
+          lit("regulates").as("relation_label"),
+          col("dst").as("object_id"),
+          when((col("n") * col("tt")) >= (col("r") * col("c")), lit("amplifies"))
+            .otherwise(lit("dampens")).as("mode"),
+          floor((col("n") * lit(1000L) * col("tt")) / (col("r") * col("c")))
+            .cast("long").as("lift_milli"))
+        .localCheckpoint(true)
+    } finally t.unpersist(false)
   }
 
   /** (USER, prefers, EVT) — the per-subject FREQUENCY family (drug to

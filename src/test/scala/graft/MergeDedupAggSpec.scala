@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.fixtures.Corpus
 import graft.merge.MergeSources
 import graft.merge.MergeSources.{FirstNonNull, OrderedConcat, PipeSetUnion}
 import graft.dedup.PairDedup
@@ -298,11 +300,26 @@ class MergeDedupAggSpec extends AnyFunSuite {
   }
 
   test("coOccurrencePairs: an input that throws leaves nothing in the session cache") {
-    spark.catalog.clearCache()
-    val bad = spark.range(20).select(($"id" % 4).as("item"),
-      when($"id" === 13, raise_error(lit("bad incidence row")))
-        .otherwise($"id").cast("long").as("k"))
-    intercept[Exception](PairDedup.coOccurrencePairs(bad, "item", "k", maxDf = 8))
-    assert(spark.sharedState.cacheManager.isEmpty)
+    // The kernel and the two family builders that persist a frame of
+    // their own around it (bundle_with) or around a join (regulates),
+    // each over an input with one raise_error row.
+    val bad = when($"id" === 13, raise_error(lit("bad input row")))
+    val n = spark.range(20)
+    val builders: Seq[(String, () => DataFrame)] = Seq(
+      "coOccurrencePairs" -> (() => PairDedup.coOccurrencePairs(
+        n.select(($"id" % 4).as("item"), bad.otherwise($"id").cast("long").as("k")),
+        "item", "k", maxDf = 8)),
+      "bundleWithFrom" -> (() => Corpus.bundleWithFrom(
+        n.select(($"id" % 5).as("ok"),
+          bad.otherwise(concat(lit("PART:"), ($"id" % 4).cast("string"))).as("cid")))),
+      "regulatesFrom" -> (() => Corpus.regulatesFrom(
+        n.select(concat(lit("EVT:"), ($"id" % 3).cast("string")).as("subject_id"),
+          concat(lit("EVT:"), ($"id" % 2).cast("string")).as("object_id"),
+          bad.otherwise($"id").cast("long").as("n_times")))))
+    builders.foreach { case (name, build) =>
+      spark.catalog.clearCache()
+      intercept[Exception](build())
+      assert(spark.sharedState.cacheManager.isEmpty, name)
+    }
   }
 }

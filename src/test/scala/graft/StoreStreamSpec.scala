@@ -242,12 +242,25 @@ class StoreStreamSpec extends AnyFunSuite {
     // resume: second run over the same store reads committed snapshots
     val r2 = Pipeline.run(spark, TestSpark.sf0001, base, partitions = 8)
     assert(r2.nTriples == r1.nTriples && r2.nNodes == r1.nNodes)
-    // retention: the per-stage snapshot count stays bounded across runs
+    // the rerun resumed every stage: each still has its one snapshot
     Pipeline.Stages.foreach { st =>
-      val snaps = GraphStore.snapshots(base, st)
-      assert(snaps.nonEmpty && snaps.size <= 2,
-        s"stage $st snapshots: $snaps")
+      assert(GraphStore.snapshots(base, st) == Seq(0L), s"stage $st")
     }
+  }
+
+  test("pipeline: an input file with a newer modification time recomputes every stage") {
+    val input = Files.createTempDirectory("sf_touched_")
+    Files.list(Paths.get(TestSpark.sf0001)).forEach(f => Files.copy(f, input.resolve(f.getFileName)))
+    val base = Files.createTempDirectory("pipe_touched_").toString
+    val r1 = Pipeline.run(spark, input.toString, base, partitions = 8)
+    val orders = input.resolve("orders.parquet")
+    Files.setLastModifiedTime(orders, java.nio.file.attribute.FileTime.fromMillis(
+      Files.getLastModifiedTime(orders).toMillis + 3600000L))
+    val r2 = Pipeline.run(spark, input.toString, base, partitions = 8)
+    Pipeline.Stages.foreach { st =>
+      assert(GraphStore.latestSnapshot(base, st) == 1L, s"stage $st")
+    }
+    assert(r2.nTriples == r1.nTriples && r2.nNodes == r1.nNodes)
   }
 
   /** True once the session cache is empty, polled for up to 10 s: the
